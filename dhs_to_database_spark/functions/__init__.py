@@ -5,9 +5,14 @@ so these stay JVM-side (SURVEY.md §2.C: the reference's scalar surface
 maps 1:1 onto pyspark.sql.functions).
 """
 
-from ..operators.dedup import char_shingles, tokenize_words, word_shingles  # noqa: F401
 from ..operators.similarity import cosine, dot, l2_norm, lsh_signature  # noqa: F401
-from ..operators.text_analysis import n_tokens, normalized_fingerprint  # noqa: F401
+from ..operators.tokens import (  # noqa: F401
+    char_shingles,
+    n_tokens,
+    normalized_fingerprint,
+    tokenize_words,
+    word_shingles,
+)
 
 __all__ = [
     "char_shingles",

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .registry import query
+from .tokens import tokenize_words
 from .util import local_rows_df
 
 _EOW = "</w>"
@@ -58,11 +59,7 @@ def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(w, n) corpus word-frequency table — the ONLY corpus-scale pass."""
     return (
         docs.select(
-            F.explode(
-                F.split(
-                    F.regexp_replace(F.lower(F.trim(text_col)), r"[ \t\n\x0b\f\r]+", " "), " "
-                )
-            ).alias("w")
+            F.explode(tokenize_words(text_col)).alias("w")
         )
         .filter(F.col("w") != "")
         .groupBy("w")

@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from ..sources.tables import load_table
 from .registry import query
 from .util import local_rows_df
-from .sampling import _java_ws_tokens
+from .tokens import WS
 
 _HASH_DIM = 16  # hashed bag-of-words buckets
 _DENSE = 4  # log-length, tokens/100, mean token length/10, stopword ratio
@@ -72,8 +72,8 @@ def featurize(docs: DataFrame, text_col: str = "text") -> DataFrame:
     array — the per-token Python loop is gone. Python-level work is
     only the md5 bucket of each UNSEEN distinct token (memoized across
     batches), so hot-token corpora pay ~zero interpreter cost per
-    occurrence. Tokenization is Java-\\s+ exact via the same regex
-    class as ``_java_ws_tokens`` (ASCII-space trim only), with the
+    occurrence. Tokenization is Java-\\s+ exact via ``tokens.WS``, the
+    class of ``tokens._java_ws_tokens`` (ASCII-space trim only), with the
     original kernel's ``if tx else []`` guard preserved: None AND ''
     both yield zero tokens. Distinct tokens stay PYTHON STRINGS
     end-to-end (object-dtype unique — no fixed-width ``astype('U')``,
@@ -95,7 +95,7 @@ def featurize(docs: DataFrame, text_col: str = "text") -> DataFrame:
                 continue
             txt = pdf[text_col]
             nchars = txt.str.len().fillna(0).to_numpy(dtype=np.int64)
-            toks = txt.str.strip(" ").str.split("[ \t\n\x0b\f\r]+", regex=True)
+            toks = txt.str.strip(" ").str.split(WS, regex=True)
             # `if tx else []`: None and '' alike contribute no tokens
             tok_lists = [
                 v if (isinstance(v, list) and tx) else []

@@ -31,8 +31,8 @@ import tempfile
 
 from ..sources.tables import load_table
 from .registry import query
+from .tokens import explode_ngrams, normalized_fingerprint, tokenize_words, ws_tokens
 from .util import local_rows_df, spread_narrow_cpu
-from .text_analysis import normalized_fingerprint
 
 # ---------------------------------------------------------------------------
 # Per-corpus materialized artifacts (signature / band tables).
@@ -101,16 +101,6 @@ _JACCARD_LIMIT = 200  # bounded all-pairs slice; the scale path is MinHash
 _JACCARD_THRESHOLD = 0.5
 
 
-def char_shingles(col_name: str = "t", n: int = 4) -> Column:
-    """Array of character n-grams of the column NAMED ``col_name`` (expects
-    length >= n). Takes a name, not a Column: the expression must reference
-    the column by name inside the lambda."""
-    return F.expr(
-        f"transform(sequence(1, length({col_name}) - {n - 1}),"
-        f" i -> substring({col_name}, i, {n}))"
-    ).alias("shingles")
-
-
 @query(
     "ngram_jaccard_pairs",
     oracle=f"""
@@ -138,11 +128,14 @@ def char_shingles(col_name: str = "t", n: int = 4) -> Column:
 )
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    docs = spread_narrow_cpu(
-        d.filter((F.col("doc_id") < _JACCARD_LIMIT) & (F.length("text") >= 4))
-        .select("doc_id", "text")
-    ).select("doc_id", F.lower("text").alias("t"))
-    sh = docs.select("doc_id", F.explode(char_shingles("t")).alias("sh")).distinct()
+    src = d.filter((F.col("doc_id") < _JACCARD_LIMIT) & (F.length("text") >= 4))
+    # the length filter makes the short-input rule inert; the whole-input
+    # rule needs no CASE guard, so the gram column stays non-nullable
+    sh = explode_ngrams(
+        src.select("doc_id", "text"), "doc_id", F.lower("text"), 4,
+        unit="char", whole_short=True, spread=True,
+    )
+    sh = sh.select("doc_id", F.col("gram").alias("sh")).distinct()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "sh")
     b = sh.select(F.col("doc_id").alias("doc_b"), "sh")
@@ -177,28 +170,6 @@ _N_HASHES = 32
 _N_BANDS = 8  # 4 rows per band
 
 
-def word_shingles(text_col: str = "text", n: int = 3) -> Column:
-    """Array of ``n``-word shingles of an ALREADY-TOKENIZED array column.
-
-    ``text_col`` must name an ``array<string>`` column (see
-    ``tokenize_words``). Tokenization is deliberately a separate projection:
-    an expression inlined into a higher-order-function lambda is re-evaluated
-    per element (no common-subexpression elimination across lambda bodies),
-    which made the original one-shot form re-run the regexp split once per
-    shingle — 6x slower on the bench corpus.
-    """
-    return F.expr(
-        f"transform(sequence(1, greatest(size({text_col}) - {n - 1}, 1)),"
-        f" i -> concat_ws(' ', slice({text_col}, i, {n})))"
-    )
-
-
-def tokenize_words(col: Column | str) -> Column:
-    """Whitespace tokenization with the corpus normalization rule."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(F.regexp_replace(F.lower(F.trim(c)), r"[ \t\n\x0b\f\r]+", " "), " ")
-
-
 def minhash_signatures(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """One row per doc: ``sig`` = array of _N_HASHES minhash components.
 
@@ -208,11 +179,9 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     No pre-aggregation ``distinct``: MIN is duplicate-insensitive, so
     duplicate shingles cost nothing and we save a full shuffle; the only
     shuffle is the partial-aggregated groupBy(doc)."""
-    sh = (
-        docs.select(id_col, tokenize_words("text").alias("ws"))
-        .select(id_col, F.explode(word_shingles("ws", 3)).alias("sh"))
-        .select(id_col, F.xxhash64("sh").alias("h"))
-    )
+    sh = explode_ngrams(
+        docs, id_col, tokenize_words("text"), 3, whole_short=True
+    ).select(id_col, F.xxhash64("gram").alias("h"))
     mins = [F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"h{i}") for i in range(_N_HASHES)]
     agg = sh.groupBy(id_col).agg(*mins)
     return agg.select(id_col, F.array(*[f"h{i}" for i in range(_N_HASHES)]).alias("sig"))
@@ -681,10 +650,10 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document duplicated {n}-token spans with doc/occurrence
     counts and first/last carrier — the flag-then-excise primitive of
     span-level dedup (whole-doc paths: ``dedup_exact``/``minhash_near_dup``)."""
-    from .sampling import explode_ngrams
-
     d = load_table(spark, sf_dir, "documents")
-    grams = explode_ngrams(d, _SPAN_N, distinct=False)
+    grams = explode_ngrams(
+        d.select("doc_id", "text"), "doc_id", ws_tokens("text"), _SPAN_N, spread=True
+    )
     return (
         grams.groupBy("gram")
         .agg(
@@ -754,17 +723,13 @@ def max_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     total duplicated tokens. A gram is 'duplicated' when it occurs >= 2
     times corpus-wide (within-doc repeats included); a doc appears iff it
     carries at least one duplicated gram."""
-    from .sampling import explode_ngrams_pos
-
     d = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     # occ feeds BOTH the freq agg and the join probe — localCheckpoint so
-    # the Arrow n-gram kernel runs once (the excise_exact_substrings fix;
+    # the n-gram kernel runs once (the excise_exact_substrings fix;
     # ReuseExchange can't dedupe across the partial agg)
-    occ = (
-        explode_ngrams_pos(d, _SPAN_N)
-        .select("doc_id", "pos", "gram")
-        .localCheckpoint(eager=True)
-    )
+    occ = explode_ngrams(
+        d.select("doc_id", "text"), "doc_id", ws_tokens("text"), _SPAN_N, pos=True, spread=True
+    ).localCheckpoint(eager=True)
     dupg = (
         occ.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("__c"))
@@ -831,7 +796,7 @@ def max_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doc_id*2^20+pos bigint packing, whose >1M-token / >2^43-doc_id
 # overflow silently corrupted keeper choice in BOTH engines — struct
 # ordering has no width assumption to violate). Plan shape at 100 TB:
-#   * occurrence generation is the narrow Arrow n-gram kernel (+pos);
+#   * occurrence generation is the narrow n-gram kernel (+pos);
 #   * one shuffle groups occurrences by gram (map-side combined count +
 #     min) — production keys this by xxhash64(gram) to shrink shuffle
 #     width, the oracle-checked query keeps the text so DuckDB can
@@ -864,20 +829,20 @@ def excise_exact_substrings(
     a unique span spuriously — harmless for training-data curation,
     excluded from the exact oracle tier. Tier parity on collision-free
     corpora is pinned by test_excise_hash_tier_parity."""
-    from .sampling import explode_ngrams_pos
-
     # NULL-text docs are dropped (not rewritten): the oracle's UNNEST over
     # a NULL token array yields no rows, so both engines omit them.
     docs = docs.filter(F.col("text").isNotNull())
 
     # occ feeds BOTH the keeper aggregation and the join probe side;
-    # without a cut the Arrow n-gram kernel (the dominant corpus pass)
+    # without a cut the n-gram kernel (the dominant corpus pass)
     # would execute twice — ReuseExchange can't help because one consumer
     # partial-aggregates below its exchange. localCheckpoint materializes
     # it once (the minhash_lsh_md5/simhash_md5 pattern in this file).
     gkey = (F.xxhash64("gram") if hash_grams else F.col("gram")).alias("gkey")
     occ = (
-        explode_ngrams_pos(docs, n)
+        explode_ngrams(
+            docs.select("doc_id", "text"), "doc_id", ws_tokens("text"), n, pos=True, spread=True
+        )
         .select("doc_id", "pos", gkey)
         .localCheckpoint(eager=True)
     )
@@ -909,10 +874,9 @@ def _rebuild_without_cuts(docs: DataFrame, cut_idx: DataFrame) -> DataFrame:
     ``excise_exact_substrings`` and ``remove_boilerplate_grams``. ONE doc_id
     equi-join (cut sets are per-doc arrays, bounded by doc length, never
     corpus-scale); the rewrite is a JVM higher-order lambda over the token
-    array. ``F.split(trim, '[ \\t\\n\\x0b\\f\\r]+')`` matches explode_ngrams_pos's tokenizer
-    EXACTLY (java-regex semantics, see _java_ws_tokens) — the cut indexes
-    are positions into this array."""
-    toks = docs.select("doc_id", F.split(F.trim("text"), r"[ \t\n\x0b\f\r]+").alias("__ws"))
+    array. The cut indexes are positions into the ``ws_tokens`` array,
+    the tokenizer the positional gram pass used."""
+    toks = docs.select("doc_id", ws_tokens("text").alias("__ws"))
     return (
         toks.join(cut_idx, "doc_id", "left")
         .select(
@@ -1017,22 +981,20 @@ def remove_boilerplate_grams(
     tokens pass through uncut."""
     docs = docs.filter(F.col("text").isNotNull())
     toks = spread_narrow_cpu(docs.select("doc_id", "text")).select(
-        "doc_id", F.split(F.trim("text"), r"[ \t\n\x0b\f\r]+").alias("__ws")
+        "doc_id", ws_tokens("text").alias("__ws")
     )
     # long_enough feeds BOTH the DF count and the occurrence probe: without
     # a cut the scan+split kernel runs twice (the excise dual-consumer
     # lesson) — localCheckpoint materializes the token arrays once.
-    # word_shingles' short-doc guard is inert behind the size filter, so
-    # its windows match the oracle's generate_series exactly.
     long_enough = (
         toks.filter(F.size("__ws") >= n).localCheckpoint(eager=True)
     )
     # Per-doc distinct happens inside the array (map-side) — the groupBy is
-    # the plan's ONLY corpus-scale shuffle, and it map-side combines.
+    # the plan's ONLY corpus-scale shuffle, and it map-side combines. The
+    # size filter makes the short-doc rule inert (windows match the
+    # oracle's generate_series); the whole-doc rule needs no CASE guard.
     df_counts = (
-        long_enough.select(
-            F.explode(F.array_distinct(word_shingles("__ws", n))).alias("gram")
-        )
+        explode_ngrams(long_enough, [], F.col("__ws"), n, whole_short=True, distinct=True)
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("df"))
     )
@@ -1044,10 +1006,7 @@ def remove_boilerplate_grams(
         .limit(cap)
         .select("gram")
     )
-    occ = long_enough.select(
-        "doc_id",
-        F.posexplode(word_shingles("__ws", n)).alias("pos", "gram"),
-    )
+    occ = explode_ngrams(long_enough, "doc_id", F.col("__ws"), n, whole_short=True, pos=True)
     cut_idx = (
         occ.join(F.broadcast(bp), "gram")
         .select(
@@ -1176,16 +1135,15 @@ def _md5_shingle_hashes(d: DataFrame, wide: bool = False) -> DataFrame:
 
     Input spread before the tokenize/shingle/hash kernel (r14, guide
     §2.5): size-gated no-op at corpus scale, see ``spread_narrow_cpu``."""
+    src = d.select("doc_id", "text")
     return (
-        spread_narrow_cpu(d.select("doc_id", "text"))
-        .select("doc_id", tokenize_words("text").alias("ws"))
-        .select("doc_id", F.explode(word_shingles("ws", 3)).alias("shingle"))
+        explode_ngrams(src, "doc_id", tokenize_words("text"), 3, whole_short=True, spread=True)
         .select(
             "doc_id",
             (
-                F.xxhash64("shingle")
+                F.xxhash64("gram")
                 if wide
-                else _md5_long28(F.col("shingle"))
+                else _md5_long28(F.col("gram"))
             ).alias("h"),
         )
     )
@@ -1417,10 +1375,10 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # them a joinable '' shingle while the oracle's array_to_string(NULL)
     # never joins (the pinned NULL-text gotcha)
     d = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    src = d.select("doc_id", "text")
     toks = (
-        spread_narrow_cpu(d.select("doc_id", "text"))
-        .select("doc_id", tokenize_words("text").alias("ws"))
-        .select("doc_id", F.explode(word_shingles("ws", 3)).alias("w"))
+        explode_ngrams(src, "doc_id", tokenize_words("text"), 3, whole_short=True, spread=True)
+        .select("doc_id", F.col("gram").alias("w"))
         .distinct()
     )
     # map-side-combined freq agg + AQE-skew-splittable join-back (the
@@ -1877,10 +1835,10 @@ def setsim_join_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the single-row-group scan before the tokenize/shingle kernel
     # (guide §2.5): one scan task would otherwise serialize the whole
     # CPU-heavy explode; size-gated no-op at corpus scale (util helper)
+    src = d.select("doc_id", "text")
     toks = (
-        spread_narrow_cpu(d.select("doc_id", "text"))
-        .select("doc_id", tokenize_words("text").alias("ws"))
-        .select("doc_id", F.explode(word_shingles("ws", 3)).alias("w"))
+        explode_ngrams(src, "doc_id", tokenize_words("text"), 3, whole_short=True, spread=True)
+        .select("doc_id", F.col("gram").alias("w"))
         .distinct()
     )
     # Attach the per-shingle corpus frequency with a plain shuffle join:
@@ -2308,16 +2266,8 @@ def shared_gram_source_sets(
     ``dropped_hot_grams`` (grams excluded for exceeding the cap) from
     the same pass, no extra job — the ``bucket_pairs`` /
     ``dropped_bucket_rows`` discipline."""
-    n = _EXCISE_N
-    toks = spread_narrow_cpu(
-        docs.filter(F.col("text").isNotNull()).select("source", "text")
-    ).select("source", F.split(F.trim("text"), r"[ \t\n\x0b\f\r]+").alias("__ws"))
-    # size filter first: word_shingles' short-doc guard is inert, windows
-    # match the oracle's generate_series exactly
-    grams = toks.filter(F.size("__ws") >= n).select(
-        "source",
-        F.explode(F.array_distinct(word_shingles("__ws", n))).alias("gram"),
-    )
+    src = docs.filter(F.col("text").isNotNull()).select("source", "text")
+    grams = explode_ngrams(src, "source", ws_tokens("text"), _EXCISE_N, distinct=True, spread=True)
     sets = grams.groupBy("gram").agg(
         F.sort_array(F.collect_set("source")).alias("__ss")
     )

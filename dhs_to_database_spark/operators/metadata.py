@@ -840,8 +840,7 @@ def dq_checks_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row corpus release report (see block comment)."""
-    from .dedup import normalized_fingerprint
-    from .text_analysis import n_tokens
+    from .tokens import n_tokens, normalized_fingerprint
 
     d = load_table(spark, sf_dir, "documents")
     base = d.select(

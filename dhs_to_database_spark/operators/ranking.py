@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .registry import query
+from .tokens import n_tokens
 
 
 class RankInputHandle:
@@ -295,7 +296,7 @@ def spearman_length_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = d.select(
         "doc_id",
         F.length("text").alias("x"),
-        F.size(F.split(F.trim("text"), r"[ \t\n\x0b\f\r]+")).alias("y"),
+        n_tokens(F.col("text")).alias("y"),
     )
     rx, total, hx = global_rank_parts(m, ["x", "doc_id"], rank_name="rx")
     ry, _, hy = global_rank_parts(rx, ["y", "doc_id"], rank_name="ry")

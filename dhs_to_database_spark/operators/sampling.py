@@ -24,6 +24,14 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .registry import query
+from .tokens import (
+    explode_ngrams,
+    n_tokens,
+    normalized_fingerprint,
+    passes_quality,
+    tokenize_words,
+    ws_tokens,
+)
 from .util import spread_narrow_cpu
 
 _BUCKETS = 65536  # first 4 hex chars of md5
@@ -150,8 +158,6 @@ _SEQ_TOKENS = 512
 def sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from .text_analysis import n_tokens
-
     d = load_table(spark, sf_dir, "documents")
     docs = d.select(
         "doc_id",
@@ -212,13 +218,9 @@ def sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .text_analysis import n_tokens, normalized_fingerprint
-
     d = load_table(spark, sf_dir, "documents")
     passed = spread_narrow_cpu(d.select("doc_id", "lang", "text")).filter(
-        (F.length("text") >= 100)
-        & (F.length("text") <= 20000)
-        & (n_tokens(F.col("text")) >= 20)
+        passes_quality(F.col("text"))
     )
     keep_first = (
         passed.select(
@@ -287,11 +289,9 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equal-share mix at a 50%-of-corpus token budget: rate_lang =
     min(1, (total/2/n_langs) / lang_tokens), applied as a hash threshold."""
-    from .text_analysis import n_tokens as _n_tokens
-
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", "lang", _n_tokens(F.col("text")).cast("bigint").alias("n_tokens")
+        "doc_id", "lang", n_tokens(F.col("text")).cast("bigint").alias("n_tokens")
     )
     lang_tot = toks.groupBy("lang").agg(
         F.sum("n_tokens").cast("bigint").alias("lang_tokens")
@@ -332,14 +332,15 @@ def token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   probed map-side and never shuffles; the only shuffle is the final
 #   per-doc aggregation of matches, whose input is just the surviving
 #   (contaminated) grams.
-# - Gram generation is pure JVM (split projection + transform/slice +
-#   explode — guide §4.1). It was an Arrow-batched mapInPandas kernel
-#   through r13 on the strength of an early "HOF ~40x slower" measurement,
-#   but that measurement timed the tokenizer INLINED into the lambda —
-#   interpreted HOF lambdas re-evaluate inlined subexpressions per
-#   element, so the regexp split re-ran once per gram (the word_shingles
-#   lesson). With the split hoisted into its own projection the JVM form
-#   is 15-36% faster than the Python kernel at sf0.1 (isolated noop-sink
+# - Gram generation is pure JVM (``tokens.explode_ngrams``: split
+#   projection + transform/slice + explode — guide §4.1). It was an
+#   Arrow-batched mapInPandas kernel through r13 on the strength of an
+#   early "HOF ~40x slower" measurement, but that measurement timed the
+#   tokenizer INLINED into the lambda — interpreted HOF lambdas
+#   re-evaluate inlined subexpressions per element, so the regexp split
+#   re-ran once per gram (the word_shingles lesson). With the split
+#   hoisted into its own projection the JVM form is 15-36% faster than
+#   the Python kernel at sf0.1 (isolated noop-sink
 #   min-of-3: pos-kernel 1.93->1.64 s, distinct 1.07->0.69 s, with a
 #   groupBy consumer 1.39->1.00 s; row-for-row identical output), removes
 #   the JVM->Python->JVM Arrow round-trip from every corpus-scale gram
@@ -351,114 +352,6 @@ def token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   docs) has essentially zero 8-gram collisions — the operator takes the
 #   width as a parameter.
 # ---------------------------------------------------------------------------
-
-
-#: Java whitespace class used by every tokenizer in the package (see
-#: ``_java_ws_tokens`` for the exact semantics).
-_WS_SPLIT = r"[ \t\n\x0b\f\r]+"
-
-
-def _gram_array(tokens: Column, n: int) -> Column:
-    """Array of space-joined ``n``-grams of an ALREADY-PROJECTED token-array
-    column. Callers on hot paths MUST hoist the ``split`` into its own
-    projection and pass the resulting attribute here: interpreted HOF
-    lambdas re-evaluate inlined subexpressions PER ELEMENT, so an inlined
-    split re-tokenizes the document once per gram (measured ~2.5x on the
-    gram consumers; the word_shingles lesson). A multiply-referenced
-    attribute is safe — CollapseProject keeps the projection because the
-    token array is referenced three times below.
-
-    Empty array when the document has fewer than ``n`` tokens (guards the
-    descending-``sequence`` edge: Spark's sequence(1, 0) yields [1, 0],
-    not []).
-    """
-    return F.when(F.size(tokens) < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(tokens) - (n - 1)),
-            lambda i: F.array_join(F.slice(tokens, i, n), " "),
-        )
-    )
-
-
-def token_ngrams(col: Column, n: int) -> Column:
-    """Array of space-joined token ``n``-grams of a text column (inline
-    convenience form — for corpus-scale passes use ``explode_ngrams`` /
-    ``explode_ngrams_pos``, which hoist the split per ``_gram_array``'s
-    warning)."""
-    return _gram_array(F.split(F.trim(col), _WS_SPLIT), n)
-
-
-def explode_ngrams(
-    df: DataFrame,
-    n: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_id: str = "doc_id",
-    distinct: bool = True,
-) -> DataFrame:
-    """(id, gram) rows — the token ``n``-grams of ``text_col`` (per-doc
-    DISTINCT by default; ``distinct=False`` keeps every occurrence, for
-    span-duplication counting). Pure JVM (see module comment): a hoisted
-    split projection feeds ``_gram_array``'s transform/slice, with per-doc
-    distinct applied map-side via ``array_distinct`` before the explode.
-    Narrow map: no shuffle, any partitioning, and — unlike the former
-    Arrow kernel — transparent to column pruning and predicate pushdown
-    at the scan. NULL/empty/short docs yield no rows (explode of an
-    empty/NULL array), exactly as the Python kernel did.
-
-    r14 (guide §2.5): the (id, text) input is size-gate spread before the
-    split/gram kernel — a single-row-group table scans as ONE task and
-    serializes the whole CPU-heavy explode; corpus-scale inputs pass
-    through untouched (see ``spread_narrow_cpu``)."""
-    toks = spread_narrow_cpu(
-        df.select(F.col(id_col).alias(out_id), F.col(text_col).alias("__tx"))
-    ).select(out_id, F.split(F.trim(F.col("__tx")), _WS_SPLIT).alias("__toks"))
-    arr = _gram_array(F.col("__toks"), n)
-    if distinct:
-        arr = F.array_distinct(arr)
-    return toks.select(out_id, F.explode(arr).alias("gram"))
-
-
-def _java_ws_tokens(tx: str | None) -> list[str]:
-    """Exact Python replica of Spark's ``split(trim(x), '[ \\t\\n\\x0b\\f\\r]+')``:
-    trim strips ASCII spaces only; the split class is Java's ``\\s`` =
-    ``[ \\t\\n\\x0b\\f\\r]`` (NOT Python's unicode-aware ``str.split``).
-    '' and all-separator inputs yield [''], as Spark does."""
-    import re
-
-    if tx is None:
-        return []
-    return re.split("[ \t\n\x0b\f\r]+", tx.strip(" "))
-
-
-def explode_ngrams_pos(
-    df: DataFrame,
-    n: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, pos, gram) rows — every token ``n``-gram OCCURRENCE with its
-    0-based token start position (the positional variant of
-    ``explode_ngrams``, for span excision where WHERE a duplicate sits
-    matters, not just that it exists). Pure JVM: ``posexplode`` over
-    ``_gram_array``'s grams (split hoisted into its own projection, per
-    that helper's warning) — the array index IS the 0-based token start
-    position. Narrow map, no shuffle, any partitioning.
-
-    Tokenization is ``split(trim(text), '[ \\t\\n\\x0b\\f\\r]+')`` with JAVA regex
-    semantics (`_java_ws_tokens` is its exact Python replica for
-    driver/kernel consumers) because span-excision consumers index these
-    positions back into Spark's ``F.split`` output: the two must agree
-    token-for-token (leading non-space whitespace yields a leading ''
-    token in both; Python split would silently shift every position by
-    one). Input spread per ``explode_ngrams``'s r14 note (size-gated)."""
-    toks = spread_narrow_cpu(
-        df.select(F.col(id_col), F.col(text_col).alias("__tx"))
-    ).select(id_col, F.split(F.trim(F.col("__tx")), _WS_SPLIT).alias("__toks"))
-    return toks.select(
-        id_col,
-        F.posexplode(_gram_array(F.col("__toks"), n)).alias("pos", "gram"),
-    )
 
 
 def decontaminate(
@@ -504,18 +397,22 @@ def _gram_matches(
     occurs in a (cap-surviving) benchmark doc — the shared probe stage of
     ``benchmark_decontaminate`` and ``decontaminate_pairs``, so the cap
     semantics live in exactly one Spark code path."""
-    train_grams = explode_ngrams(train, n, id_col, text_col, out_id="doc_id")
-    bench_grams = explode_ngrams(benchmark, n, id_col, text_col, out_id="bench_doc")
+    def grams(df: DataFrame, out_id: str) -> DataFrame:
+        src = df.select(F.col(id_col).alias(out_id), F.col(text_col).alias("__tx"))
+        return explode_ngrams(src, out_id, ws_tokens("__tx"), n, distinct=True, spread=True)
+
+    train_grams = grams(train, "doc_id")
+    bench_grams = grams(benchmark, "bench_doc")
     if max_gram_bench_docs is not None:
         # r14 (guide §2.3/§2.4): the cap used to be a COUNT-per-gram agg
         # joined back onto a SECOND explode of the benchmark side — two
         # full bench-gram passes plus a join, all executed while BUILDING
         # the broadcast. One collect_set agg is the same cap decision
-        # (bench_grams rows are distinct (bench_doc, gram) per
-        # explode_ngrams, so set size == row count) from ONE pass, the
-        # broadcast carries one row per gram instead of one per (gram,
-        # doc), and the doc set explodes AFTER the join (guide §3.3:
-        # explode past the join, never before it). State bound: a hot
+        # (bench_grams rows are distinct (bench_doc, gram), so set
+        # size == row count) from ONE pass, the broadcast carries one row
+        # per gram instead of one per (gram, doc), and the doc set
+        # explodes AFTER the join (guide §3.3: explode past the join,
+        # never before it). State bound: a hot
         # gram's set accumulates BEFORE the size filter drops it, so
         # per-group memory is bounded by the BENCHMARK's doc count —
         # benchmarks are curated eval suites (thousands-to-millions of
@@ -721,12 +618,6 @@ def sample_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _quality_gate(text: Column) -> Column:
-    """Same gate as text_analysis.quality_score's passes_quality."""
-    toks = F.size(F.split(F.trim(text), r"[ \t\n\x0b\f\r]+"))
-    return (F.length(text) >= 100) & (F.length(text) <= 20000) & (toks >= 20)
-
-
 @query(
     "importance_weights",
     oracle="""
@@ -777,10 +668,8 @@ def importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread_narrow_cpu(d.select("doc_id", "text"))
         .select(
             "doc_id",
-            _quality_gate(F.col("text")).alias("is_target"),
-            F.split(
-                F.regexp_replace(F.lower(F.trim("text")), r"[ \t\n\x0b\f\r]+", " "), " "
-            ).alias("t"),
+            passes_quality(F.col("text")).alias("is_target"),
+            tokenize_words("text").alias("t"),
         )
         .select("doc_id", "is_target", F.explode("t").alias("term"))
         .filter(F.col("term") != "")
@@ -948,9 +837,7 @@ def term_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "lang",
             (split_assignment(F.col("doc_id"), 0.8) == "train").alias("is_train"),
-            F.split(
-                F.regexp_replace(F.lower(F.trim("text")), r"[ \t\n\x0b\f\r]+", " "), " "
-            ).alias("t"),
+            tokenize_words("text").alias("t"),
         )
         .select("lang", "is_train", F.explode("t").alias("term"))
         .filter(F.col("term") != "")
@@ -1067,18 +954,16 @@ def term_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.text_analysis import n_tokens as _n_tokens
-    from ..operators.text_analysis import normalized_fingerprint
     from .sampling import importance_weights  # self-module import for clarity
 
     d = load_table(spark, sf_dir, "documents")
     passed = (
         spread_narrow_cpu(d.select("doc_id", "lang", "text"))
-        .filter(_quality_gate(F.col("text")))
+        .filter(passes_quality(F.col("text")))
         .select(
             "doc_id",
             "lang",
-            _n_tokens(F.col("text")).cast("bigint").alias("n_tokens"),
+            n_tokens(F.col("text")).cast("bigint").alias("n_tokens"),
             normalized_fingerprint(F.col("text")).alias("fingerprint"),
         )
     )

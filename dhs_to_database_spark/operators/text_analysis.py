@@ -17,15 +17,21 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .registry import query
+from .tokens import (
+    WS_CHARS,
+    n_tokens,
+    ngrams,
+    normalized_fingerprint,
+    passes_quality,
+    tokenize_words,
+    word_pairs,
+    ws_tokens,
+)
 from .util import local_rows_df, spread_narrow_cpu
 
 # ---------------------------------------------------------------------------
 # Token counting: whitespace tokenization + a BPE-ish proxy (4 chars/token).
 # ---------------------------------------------------------------------------
-
-
-def n_tokens(col: Column) -> Column:
-    return F.size(F.split(F.trim(col), r"[ \t\n\x0b\f\r]+"))
 
 
 @query(
@@ -79,9 +85,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks.alias("n_tokens"),
         stops.alias("n_stopwords"),
         F.round(stops.cast("decimal(18,6)") / toks, 4).cast("double").alias("stopword_ratio"),
-        ((F.length("text") >= 100) & (F.length("text") <= 20000) & (toks >= 20)).alias(
-            "passes_quality"
-        ),
+        passes_quality(F.col("text")).alias("passes_quality"),
     )
 
 
@@ -143,10 +147,6 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Document fingerprinting: normalized-content digest (md5 of
 # whitespace-collapsed lowercase text) + a shingle-count signature.
 # ---------------------------------------------------------------------------
-
-
-def normalized_fingerprint(col: Column) -> Column:
-    return F.md5(F.regexp_replace(F.lower(F.trim(col)), r"[ \t\n\x0b\f\r]+", " ").cast("binary"))
 
 
 @query(
@@ -276,9 +276,7 @@ def vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = spread_narrow_cpu(d.select("doc_id", "text")).select(
         "doc_id",
-        F.explode(
-            F.split(F.regexp_replace(F.lower(F.trim("text")), r"[ \t\n\x0b\f\r]+", " "), " ")
-        ).alias("term"),
+        F.explode(tokenize_words("text")).alias("term"),
     ).filter(F.col("term") != "")
     return (
         toks.groupBy("term")
@@ -308,14 +306,13 @@ def vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # set fails the oracle gate.
 # ---------------------------------------------------------------------------
 
-# Whitespace spelled as an explicit class, not \s: Java's \s includes \x0b
-# (vertical tab) while RE2/DuckDB's does not, so a bare \s in an
-# oracle-gated pattern would diverge on text containing \x0b inside a
-# match window (ADVICE r6; same rule sampling._java_ws_tokens applies).
-_WS = r" \t\n\x0b\f\r"
+# Whitespace spelled as the explicit class ``tokens.WS_CHARS``, not \s:
+# Java's \s includes \x0b (vertical tab) while RE2/DuckDB's does not, so
+# a bare \s in an oracle-gated pattern would diverge on text containing
+# \x0b inside a match window (ADVICE r6).
 _EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _IP_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
-_PHONE_RE = rf"\+?\d[\d{_WS}().-]{{7,}}\d"
+_PHONE_RE = rf"\+?\d[\d{WS_CHARS}().-]{{7,}}\d"
 _LONG_DIGITS_RE = r"\d{6,}"
 
 
@@ -511,21 +508,9 @@ _REPETITION_THRESHOLD = 0.2
 )
 def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    ws = F.split(F.regexp_replace(F.lower(F.trim("text")), r"[ \t\n\x0b\f\r]+", " "), " ")
     with_bg = spread_narrow_cpu(d.select("doc_id", "text")).select(
-        "doc_id", ws.alias("__ws")
-    ).select(
-        "doc_id",
-        F.when(
-            F.size("__ws") >= 2,
-            F.expr(
-                "transform(sequence(1, size(__ws) - 1),"
-                " i -> concat_ws(' ', slice(__ws, i, 2)))"
-            ),
-        )
-        .otherwise(F.array().cast("array<string>"))
-        .alias("bg"),
-    )
+        "doc_id", tokenize_words("text").alias("__ws")
+    ).select("doc_id", ngrams(F.col("__ws"), 2).alias("bg"))
     n_bg = F.size("bg").cast("bigint")
     n_dup = (F.size("bg") - F.size(F.array_distinct("bg"))).cast("bigint")
     ratio = F.when(
@@ -576,10 +561,9 @@ _CHUNK_STRIDE = 48
 )
 def context_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    ws = F.split(F.regexp_replace(F.lower(F.trim("text")), r"[ \t\n\x0b\f\r]+", " "), " ")
     return (
         spread_narrow_cpu(d.select("doc_id", "text"))
-        .select("doc_id", ws.alias("__ws"))
+        .select("doc_id", tokenize_words("text").alias("__ws"))
         .select(
             "doc_id",
             "__ws",
@@ -661,7 +645,7 @@ def cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # beyond the size-gated input spread (guide §2.5).
     return (
         spread_narrow_cpu(d.select("doc_id", "text"))
-        .select("doc_id", F.split(F.trim("text"), r"[ \t\n\x0b\f\r]+").alias("__ws"))
+        .select("doc_id", ws_tokens("text").alias("__ws"))
         .select(
             "doc_id",
             F.size("__ws").alias("__n"),
@@ -740,9 +724,7 @@ def token_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = spread_narrow_cpu(d.select("doc_id", "text")).select(
         "doc_id",
-        F.explode(
-            F.split(F.regexp_replace(F.lower(F.trim("text")), r"[ \t\n\x0b\f\r]+", " "), " ")
-        ).alias("term"),
+        F.explode(tokenize_words("text")).alias("term"),
     ).filter(F.col("term") != "")
     vocab = toks.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     tot = vocab.agg(F.sum("cnt").cast("bigint").alias("total_tokens"))
@@ -839,7 +821,7 @@ def frequent_terms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of re-running the corpus-wide scan+split+explode as a second job.
     obs = Observation()
     toks = spread_narrow_cpu(d.select("text")).select(
-        F.explode(F.split(F.trim(F.col("text")), r"[ \t\n\x0b\f\r]+")).alias("term")
+        F.explode(ws_tokens("text")).alias("term")
     ).observe(obs, F.count(F.lit(1)).alias("nt"))
     counted = (
         toks.join(F.broadcast(cands), "term")
@@ -870,7 +852,7 @@ def frequent_terms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (symbol-to-word ratio etc.).
 # ---------------------------------------------------------------------------
 
-_PRETOKEN_RE = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \t\n\x0b\f\r]+"
+_PRETOKEN_RE = rf"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9{WS_CHARS}]+"
 
 
 def regex_pretokens(col: Column) -> Column:
@@ -898,7 +880,7 @@ def regex_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_digit_runs"
         ),
         F.size(
-            F.regexp_extract_all(F.col("text"), F.lit(r"[^a-zA-Z0-9 \t\n\x0b\f\r]+"), 0)
+            F.regexp_extract_all(F.col("text"), F.lit(rf"[^a-zA-Z0-9{WS_CHARS}]+"), 0)
         ).alias("n_symbol_runs"),
     )
 
@@ -924,18 +906,13 @@ _BM25_QUERY = ("spark", "shuffle", "partition")
 _BM25_TOPK = 20
 
 
-def _ws_terms(col: Column) -> Column:
-    """Whitespace terms, lowercased (same normalization as the rarity LM)."""
-    return F.split(F.regexp_replace(F.lower(F.trim(col)), r"[ \t\n\x0b\f\r]+", " "), " ")
-
-
 def _doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # spread the single-row-group scan before the tokenize/explode kernel
     # (r14, guide §2.5; size-gated no-op at corpus scale)
     return (
         spread_narrow_cpu(d.select("doc_id", "text"))
-        .select("doc_id", F.explode(_ws_terms(F.col("text"))).alias("term"))
+        .select("doc_id", F.explode(tokenize_words("text")).alias("term"))
         .filter(F.col("term") != "")
     )
 
@@ -1125,9 +1102,7 @@ def word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread_narrow_cpu(d.select("doc_id", "text"))
         .select(
             "doc_id",
-            F.explode(
-                F.split(F.regexp_replace(F.lower(F.trim("text")), r"[ \t\n\x0b\f\r]+", " "), " ")
-            ).alias("term"),
+            F.explode(tokenize_words("text")).alias("term"),
         )
         .filter(F.col("term") != "")
     )
@@ -1204,17 +1179,11 @@ _PMI_TOPK = 30
 def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = spread_narrow_cpu(d.select("text")).select(
-        F.split(F.regexp_replace(F.lower(F.trim("text")), r"[ \t\n\x0b\f\r]+", " "), " ").alias("t")
+        tokenize_words("text").alias("t")
     )
     bigrams = (
         toks.select(
-            F.explode(
-                F.expr(
-                    "filter(transform(sequence(1, greatest(size(t) - 1, 1)),"
-                    " i -> struct(t[i - 1] AS w1, t[i] AS w2)),"
-                    " p -> p.w1 <> '' AND p.w2 <> '')"
-                )
-            ).alias("p")
+            F.explode(word_pairs("t")).alias("p")
         )
         .select("p.w1", "p.w2")
     )
@@ -1287,7 +1256,7 @@ def term_cms(df: DataFrame, text_col: str = "text"):
     sketch class for point queries.
     """
     toks = df.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"[ \t\n\x0b\f\r]+")).alias("term")
+        F.explode(ws_tokens(text_col)).alias("term")
     )
     blob = toks.agg(
         F.expr(
@@ -1356,7 +1325,7 @@ _CMSC_W = 256
     "cms_calibration",
     oracle=f"""
     WITH toks AS (
-      SELECT string_split_regex(trim(text), '[{_WS}]+') AS t
+      SELECT string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+') AS t
       FROM documents WHERE text IS NOT NULL
     ),
     tz AS (
@@ -1400,15 +1369,9 @@ def cms_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = (
         d.filter(F.col("text").isNotNull())
-        .select(F.split(F.trim("text"), f"[{_WS}]+").alias("t"))
+        .select(ws_tokens("text").alias("t"))
         .select(
-            F.explode(
-                F.expr(
-                    "filter(transform(sequence(1, greatest(size(t) - 1, 1)),"
-                    " i -> struct(t[i - 1] AS w1, t[i] AS w2)),"
-                    " p -> p.w1 <> '' AND p.w2 <> '')"
-                )
-            ).alias("p")
+            F.explode(word_pairs("t")).alias("p")
         )
         .select(F.concat("p.w1", F.lit(" "), "p.w2").alias("term"))
     )
@@ -1545,17 +1508,11 @@ def doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = spread_narrow_cpu(d.select("doc_id", "text")).select(
         "doc_id",
-        F.split(F.regexp_replace(F.lower(F.trim("text")), r"[ \t\n\x0b\f\r]+", " "), " ").alias("t"),
+        tokenize_words("text").alias("t"),
     )
     bigrams = toks.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                "filter(transform(sequence(1, greatest(size(t) - 1, 1)),"
-                " i -> struct(t[i - 1] AS w1, t[i] AS w2)),"
-                " p -> p.w1 <> '' AND p.w2 <> '')"
-            )
-        ).alias("p"),
+        F.explode(word_pairs("t")).alias("p"),
     ).select("doc_id", "p.w1", "p.w2")
     # ONE pass over the raw bigram stream (the map-side-combined
     # (doc, bigram) agg); the model table is a second-level agg OF THE
@@ -1665,9 +1622,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     wc = (
         d.select(
-            F.explode(
-                F.split(F.regexp_replace(F.lower(F.trim("text")), r"[ \t\n\x0b\f\r]+", " "), " ")
-            ).alias("w")
+            F.explode(tokenize_words("text")).alias("w")
         )
         .filter(F.col("w") != "")
         .groupBy("w")

@@ -65,7 +65,10 @@ def spread_narrow_cpu(df: DataFrame, bytes_per_task: int = _SPREAD_BYTES_PER_TAS
     unchanged — a corpus-scale table is already scan-parallel and
     re-shuffling its payload would be pure waste (so at 100 TB this is
     structurally a no-op, and the plan carries no extra Exchange).
-    Deterministic: round-robin repartition local-sorts its input first
+    An input the optimizer has no size estimate for (e.g. a DataFrame
+    over an RDD) reports ``spark.sql.defaultSizeInBytes`` — Long.MaxValue
+    unless configured — which is past the gate, so it too returns
+    unchanged. Deterministic: round-robin repartition local-sorts its input first
     (SPARK-23207), and every consumer of this helper is value-independent
     of row placement (enforced by the layout/config invariance gates)."""
     est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())

@@ -15,10 +15,16 @@ windowed instead of unbounded; session windows use Spark's native
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.registry import query
+
+#: State-store partition count of the one-shot tempdir drains (see
+#: ``drain_to_parquet``).
+STREAM_SHUFFLE_PARTITIONS = 8
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream of the events table.
@@ -149,7 +155,6 @@ def drain_to_parquet(
     tempdir default is reclaimed at interpreter exit.
     """
     import atexit
-    import os
     import shutil
     import tempfile
 
@@ -175,15 +180,12 @@ def drain_to_parquet(
     # whose pinned partitioning must not be fought) and the session conf
     # is left untouched there. Emitted rows are state-partitioning-
     # independent (hash distribution of keys only; config-invariance
-    # gate holds at 8 vs 32 vs 200). Knob: SPARK_GRAFT_STREAM_SHUFFLE.
+    # gate holds at 8 vs 32 vs 200). The count is STREAM_SHUFFLE_PARTITIONS.
     spark = df.sparkSession
     tune_state = not caller_owns and checkpoint is None
     if tune_state:
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
-        )
+        spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
         q = (
             df.writeStream.foreachBatch(write_batch)
@@ -207,10 +209,14 @@ def drain_to_parquet(
         shutil.rmtree(ckpt, ignore_errors=True)
     if not caller_owns:
         atexit.register(shutil.rmtree, dest, ignore_errors=True)
-    spark = df.sparkSession
     try:
         return spark.read.schema(df.schema).parquet(dest)
-    except Exception:  # no batch ever wrote (empty stream)
+    except AnalysisException as e:
+        # Every write creates dest, so a missing caller-supplied dest means
+        # no micro-batch ever wrote (empty stream); any other read error
+        # is a real failure and must not come back as an empty result.
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return spark.createDataFrame([], df.schema)
 
 

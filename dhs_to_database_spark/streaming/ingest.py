@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.dedup import incremental_dedup
-from ..operators.text_analysis import normalized_fingerprint
+from ..operators.tokens import normalized_fingerprint
 from ..sources.jsonl import DOCUMENTS_SCHEMA, clean, parse_jsonl_lines
 
 

@@ -58,7 +58,7 @@ def test_featurize_matches_python_mirror(spark):
         _STOPWORDS,
         featurize,
     )
-    from dhs_to_database_spark.operators.sampling import _java_ws_tokens
+    from dhs_to_database_spark.operators.tokens import _java_ws_tokens
 
     texts = {
         1: "the quick brown fox " * 30,  # long, passes the gate

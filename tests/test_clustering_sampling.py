@@ -315,17 +315,61 @@ def test_token_budget_mix_hits_target_share(spark, tmp_path):
 
 
 def test_token_ngrams_short_doc_edges(spark):
-    from dhs_to_database_spark.operators.sampling import token_ngrams
+    """The gram kernel on short and degenerate documents: both
+    short-document rules, the word and char units, and the positional
+    and per-doc-distinct explode forms."""
+    from dhs_to_database_spark.operators.tokens import (
+        _java_ws_tokens,
+        explode_ngrams,
+        ngrams,
+        ws_tokens,
+    )
 
-    df = spark.createDataFrame(
-        [("a b c d",), ("a b",), ("  a  b   c ",), ("solo",)], "text string"
-    ).select(token_ngrams(F.col("text"), 3).alias("g"))
-    assert [r["g"] for r in df.collect()] == [
-        ["a b c", "b c d"],
-        [],
-        ["a b c"],
-        [],
+    texts = ["a b c d", "a b", "  a  b   c ", "solo", "", None, "\ta b", "x x x x"]
+    docs = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    toks = docs.select("i", "text", ws_tokens("text").alias("t"))
+
+    def per_doc(expr):
+        rows = toks.select("i", expr.alias("g")).orderBy("i").collect()
+        return [r["g"] for r in rows]
+
+    # default rule: fewer than n units -> no grams (NULL included)
+    assert per_doc(ngrams(F.col("t"), 3)) == [
+        ["a b c", "b c d"], [], ["a b c"], [], [], [], [" a b"], ["x x x", "x x x"],
     ]
+    # MinHash rule: a short document is one whole-doc gram, NULL is ''
+    assert per_doc(ngrams(F.col("t"), 3, whole_short=True)) == [
+        ["a b c", "b c d"], ["a b"], ["a b c"], ["solo"], [""], [""], [" a b"],
+        ["x x x", "x x x"],
+    ]
+    # char unit, both rules
+    assert per_doc(ngrams(F.col("text"), 4, unit="char")) == [
+        ["a b ", " b c", "b c ", " c d"], [], ["  a ", " a  ", "a  b", "  b ",
+        " b  ", "b   ", "   c", "  c "], ["solo"], [], [], ["\ta b"],
+        ["x x ", " x x", "x x ", " x x"],
+    ]
+    assert per_doc(ngrams(F.col("text"), 4, unit="char", whole_short=True))[1:2] == [
+        ["a b"]
+    ]
+
+    # positional form: pos is the 0-based token start into ws_tokens, the
+    # array the excision consumers index (the leading-tab doc keeps its
+    # leading '' token, exactly as the Python replica does)
+    n = 2
+    got = {
+        (r["i"], r["pos"], r["gram"])
+        for r in explode_ngrams(docs, "i", ws_tokens("text"), n, pos=True).collect()
+    }
+    want = set()
+    for i, tx in enumerate(texts):
+        t = _java_ws_tokens(tx)
+        want |= {(i, p, " ".join(t[p : p + n])) for p in range(len(t) - n + 1)}
+    assert got == want
+
+    # per-doc distinct collapses repeats inside a doc only
+    dist = explode_ngrams(docs, "i", ws_tokens("text"), n, distinct=True)
+    assert sorted(r["gram"] for r in dist.filter("i = 7").collect()) == ["x x"]
+    assert dist.filter("gram = 'a b'").count() == 4
 
 
 def test_decontaminate_matches_bruteforce(spark):

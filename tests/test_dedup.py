@@ -58,7 +58,7 @@ def test_java_ws_tokens_matches_duckdb_tokenizer():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from dhs_to_database_spark.operators.sampling import _java_ws_tokens
+    from dhs_to_database_spark.operators.tokens import _java_ws_tokens
 
     con = duckdb.connect()
 
@@ -139,7 +139,7 @@ def test_max_dup_span_stats_merges_overlapping_grams(spark):
     are disjoint; dup-free docs are absent."""
     import dhs_to_database_spark.operators.dedup as dd
     from dhs_to_database_spark.operators.dedup import max_dup_span_stats
-    from dhs_to_database_spark.operators.sampling import explode_ngrams_pos
+    from dhs_to_database_spark.operators.tokens import explode_ngrams, ws_tokens
 
     docs = spark.createDataFrame(
         [
@@ -150,7 +150,7 @@ def test_max_dup_span_stats_merges_overlapping_grams(spark):
         ],
         "doc_id bigint, text string",
     )
-    occ = explode_ngrams_pos(docs, 4)
+    occ = explode_ngrams(docs, "doc_id", ws_tokens("text"), 4, pos=True)
     # sanity of the fixture itself: exactly two cross-doc duplicated grams
     dup = (
         occ.groupBy("gram").count().filter("count >= 2").select("gram").collect()

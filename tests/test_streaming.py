@@ -512,6 +512,34 @@ def test_drain_caller_supplied_landing(spark, tmp_path, events_stream):
     assert os.path.isdir(os.path.join(ckpt, "offsets"))  # restartable
 
 
+def test_drain_only_nothing_landed_reads_empty(spark, tmp_path, monkeypatch):
+    """A drain in which no micro-batch ever wrote returns an empty frame
+    (with the stream's schema), for a caller-supplied dest that was never
+    created and for the tempdir default alike. Any OTHER error from the
+    final read must propagate instead of coming back as an empty result
+    (it used to be swallowed by a blanket except)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from dhs_to_database_spark.streaming.events import drain_to_parquet
+
+    src = tmp_path / "src"
+    src.mkdir()
+    stream = spark.readStream.schema("k int, v string").parquet(str(src))
+
+    landed = drain_to_parquet(
+        stream, dest=str(tmp_path / "land"), checkpoint=str(tmp_path / "ckpt")
+    )
+    assert landed.schema == stream.schema and landed.count() == 0
+    assert drain_to_parquet(stream).count() == 0
+
+    def unreadable(self, *paths, **options):
+        raise RuntimeError("landing storage unreadable")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", unreadable)
+    with pytest.raises(RuntimeError, match="landing storage unreadable"):
+        drain_to_parquet(stream)
+
+
 def test_drain_append_matches_memory_sink(spark, events_stream):
     """The parquet foreachBatch drain emits the same closed sessions as the
     memory-sink drain (same availableNow semantics, different landing)."""

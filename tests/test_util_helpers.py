@@ -26,9 +26,11 @@ def test_spread_narrow_cpu_spreads_small_single_partition_input(spark):
     assert sorted(r["id"] for r in out.collect()) == list(range(10_000))
 
 
-def test_spread_narrow_cpu_noops_past_size_gate(monkeypatch):
+def test_spread_narrow_cpu_noops_past_size_gate(monkeypatch, spark):
     """Inputs estimated past _SPREAD_SKIP_BYTES return the SAME DataFrame
-    object — a corpus-scale table must not gain a repartition Exchange."""
+    object — a corpus-scale table must not gain a repartition Exchange.
+    So does an input with NO size estimate: the optimizer reports
+    spark.sql.defaultSizeInBytes (Long.MaxValue) for an RDD-backed frame."""
 
     class _FakeStats:
         def sizeInBytes(self):
@@ -50,6 +52,11 @@ def test_spread_narrow_cpu_noops_past_size_gate(monkeypatch):
 
     fake = _FakeDF()
     assert spread_narrow_cpu(fake) is fake
+
+    unsized = spark.createDataFrame(spark.sparkContext.parallelize([(1, "a")]), "k int, v string")
+    est = unsized._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(est) == 2**63 - 1
+    assert spread_narrow_cpu(unsized) is unsized
 
 
 def test_eager_checkpoints_returns_checkpointed_frames_in_order(spark):

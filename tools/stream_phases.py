@@ -30,7 +30,7 @@ def main() -> None:
 
     from dhs_to_database_spark.session import get_spark
     from dhs_to_database_spark.sources.tables import TABLE_NAMES, load_table
-    from dhs_to_database_spark.streaming.events import read_events_stream
+    from dhs_to_database_spark.streaming.events import STREAM_SHUFFLE_PARTITIONS, read_events_stream
     from dhs_to_database_spark.streaming.stateful import session_paths
     from pyspark.sql import functions as F
 
@@ -62,7 +62,7 @@ def main() -> None:
             bdf.write.mode(wmode).parquet(dest)
 
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+        spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
         t0 = time.time()
         q = (
             out_df.writeStream.foreachBatch(write_batch)
