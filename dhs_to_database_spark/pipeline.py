@@ -138,9 +138,9 @@ def run_pipeline(
         groups.setdefault(sig, (spec, []))[1].append(dat)
 
     # -- stage 4: demux + partitioned load ---------------------------------
-    # dynamic overwrite: a re-run replaces exactly the surveys present in
-    # the input, never other surveys' partitions (A22 drop-and-reload)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # demux_to_parquet overwrites dynamically: a re-run replaces exactly
+    # the surveys present in the input, never other surveys' partitions
+    # (A22 drop-and-reload)
     unknown_frames = []
     for spec, dats in groups.values():
         result.tables.update(

@@ -66,7 +66,10 @@ def union_of_columns_schema(items_df: DataFrame, record_name: str) -> DataFrame:
 def pack_wide_table(df: DataFrame, key_columns: list[str] | None = None) -> DataFrame:
     """Pack non-key columns into one ``data`` map<string,string> column
     (lib04:446-506 packs dict->json; MapType is the Spark-native jsonb).
-    ``F.to_json(col('data'))`` round-trips to the reference's jsonb text."""
+    ``F.to_json(col('data'))`` round-trips to the reference's jsonb text.
+    The demux packs wide records in the same shape without this per-column
+    chain (``fixed_width.project_packed``); its parity test uses this
+    function as the oracle."""
     keys = key_columns if key_columns is not None else [c for c in df.columns if is_key_column(c)]
     payload = [c for c in df.columns if c not in keys]
     # packed values are never NULL: absent -> empty STRING, mirroring the

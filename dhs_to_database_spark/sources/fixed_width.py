@@ -13,6 +13,11 @@ Spark-first design: this is a *scan + N-way projection, partitioned by tag*.
   projections from the (tiny, driver-held) spec — the analogue of the
   reference's pre-grouped field dict (DAT_Parser.py:51-56) is a compiled
   Catalyst projection instead of a per-row Python loop.
+- A record wider than the reference's JSON-table threshold (A24, >500
+  payload columns) is projected straight into a ``data`` map by
+  ``project_packed``: one ``transform`` over a constant array of
+  ``(start, len)`` pairs, so the driver builds one expression, not one
+  Column chain per field (a 520-field chain cost ~46k py4j round trips).
 - Whitespace rule (DAT_Parser.py:87-105): every field is right/left-trimmed
   EXCEPT ``CASEID``/``HHID`` whose fixed-width padding is part of the key
   (HHID = CASEID minus last 3 chars — trimming would break referential
@@ -30,9 +35,10 @@ partition pruning for every downstream per-survey query.
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 NO_TRIM_KEYS = ("CASEID", "HHID")
@@ -109,6 +115,16 @@ def read_tagged_lines(spark: SparkSession, path: str | list[str], spec: DatSpec)
     )
 
 
+def _field_column(fspec: FieldSpec) -> Column:
+    """One field as a first-class column: its ``substring`` of the line,
+    trimmed and blank-to-NULL except for CASEID/HHID (see
+    ``project_record``)."""
+    c = F.substring("value", fspec.start, fspec.length)
+    if fspec.name not in NO_TRIM_KEYS:
+        c = F.nullif(F.trim(c), F.lit(""))
+    return c.alias(fspec.name)
+
+
 def project_record(tagged: DataFrame, rec: RecordSpec) -> DataFrame:
     """Select one record type's rows and split them into named columns.
 
@@ -118,19 +134,51 @@ def project_record(tagged: DataFrame, rec: RecordSpec) -> DataFrame:
     storage state there and we normalize to NULL at demux time. Keys
     (CASEID/HHID) are exempt: they are never trimmed and never nulled,
     their padding being part of the key. The one deliberate asymmetry is
-    the JSON/map-packed path, where absent values are the empty STRING
-    (reference ``fillna('')`` lib04:455) — see
-    ``plans.schema_evolution.pack_wide_table``. Property-tested end-to-end
-    in tests/test_properties.py.
+    the map-packed shape of wide records, where absent values are the
+    empty STRING (reference ``fillna('')`` lib04:455) — see
+    ``project_packed``. Property-tested end-to-end in
+    tests/test_properties.py.
     """
-    cols = []
-    for fspec in rec.fields:
-        c = F.substring("value", fspec.start, fspec.length)
-        if fspec.name not in NO_TRIM_KEYS:
-            c = F.nullif(F.trim(c), F.lit(""))
-        cols.append(c.alias(fspec.name))
     return tagged.filter(F.col("record_type") == rec.record_type_value).select(
-        "surveyid", *cols
+        "surveyid", *(_field_column(f) for f in rec.fields)
+    )
+
+
+def project_packed(tagged: DataFrame, rec: RecordSpec) -> DataFrame:
+    """Select one record type's rows in the map-packed shape (A24): key
+    columns (``is_key_column``) first-class under the ``project_record``
+    rule, then every other field in one ``data`` map<string,string>, keys
+    in spec order. This is ``pack_wide_table(project_record(..))`` (the
+    tests' oracle) as one expression::
+
+        map_from_arrays(<names>, transform(<(start, len) pairs>,
+                        p -> coalesce(trim(substring(value, p[0], p[1])), '')))
+
+    A packed value is the trimmed field, '' when blank or past the end of
+    the line — never NULL, as in the reference's ``fillna('')`` jsonb.
+    That equals the oracle's ``coalesce(nullif(trim(x), ''), '')``:
+    ``spark.read.text`` never yields a NULL ``value``, so ``trim(substring
+    (..))`` is never NULL, and a blank field is '' on both sides. The
+    ``coalesce`` is kept as the statement of that rule; it costs nothing
+    measurable. ``substring`` counts characters, not bytes, on both sides.
+    """
+    from ..plans.schema_evolution import is_key_column
+
+    keys = [f for f in rec.fields if is_key_column(f.name)]
+    payload = [f for f in rec.fields if not is_key_column(f.name)]
+    # both constants travel as JSON text, parsed once and folded by the
+    # optimizer. Item names are external input, so they go in through
+    # F.lit, never spelled into SQL; the spans are integers only.
+    names = F.from_json(F.lit(json.dumps([f.name for f in payload])), "array<string>")
+    spans = json.dumps([[int(f.start), int(f.length)] for f in payload])
+    values = F.expr(
+        f"transform(from_json('{spans}', 'array<array<int>>'),"
+        " p -> coalesce(trim(substring(value, p[0], p[1])), ''))"
+    )
+    return tagged.filter(F.col("record_type") == rec.record_type_value).select(
+        "surveyid",
+        *(_field_column(f) for f in keys),
+        F.map_from_arrays(names, values).alias("data"),
     )
 
 
@@ -184,22 +232,29 @@ def demux_to_parquet(
     ``should_pack_as_map`` is called with label=None here and that
     predicate stays with the schema-evolution path) is written PACKED —
     key columns stay first-class, the payload collapses into one
-    ``data`` map<string,string> column (``pack_wide_table``, the
+    ``data`` map<string,string> column (``project_packed``, the
     Spark-native jsonb). Same narrow shuffle-free plan: the pack is a
-    projection."""
+    projection.
+
+    ``mode="overwrite"`` replaces only the surveys present in the input:
+    every write passes ``partitionOverwriteMode=dynamic`` as a write
+    option, so other surveys' partitions stay and the session conf is
+    left as it was found."""
     tagged = read_tagged_lines(spark, path, spec).cache()
     try:
         out = {}
         packed = packed_record_names(spec) if pack_wide else set()
         for rec in spec.records.values():
             dest = f"{out_dir}/{rec.record_name}"
-            df = project_record(tagged, rec)
-            if rec.record_name in packed:
-                from ..plans.schema_evolution import pack_wide_table
-
-                df = pack_wide_table(df)
+            project = project_packed if rec.record_name in packed else project_record
+            df = project(tagged, rec)
             if sink_format == "parquet":
-                df.write.mode(mode).partitionBy("surveyid").parquet(dest)
+                (
+                    df.write.mode(mode)
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("surveyid")
+                    .parquet(dest)
+                )
                 out[rec.record_name] = dest
             else:
                 # compute-only sink (e.g. "noop"): runs the full scan +

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import json
+
 import pytest
+from pyspark.sql import functions as F
 
 from dhs_to_database_spark.sources.cspro_dcf import parse_dcf_text
 from dhs_to_database_spark.sources.fixed_width import (
@@ -226,3 +229,108 @@ def test_pack_threshold_counts_payload_not_keys():
         },
     )
     assert packed_record_names(spec) == {"OVER"}
+
+
+def test_demux_overwrite_is_dynamic_without_session_conf(spark, dat_dir, spec, tmp_path):
+    """A load replaces only the surveys in its input through a per-write
+    option, not a session conf: under the default static conf a direct
+    demux_to_parquet of survey B into a warehouse holding survey A keeps
+    A's partitions, and run_pipeline leaves
+    ``spark.sql.sources.partitionOverwriteMode`` as it found it."""
+    from dhs_to_database_spark.pipeline import run_pipeline
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        wh = str(tmp_path / "wh")
+        demux_to_parquet(spark, dat_dir, spec, wh)  # survey 511
+        b = tmp_path / "b"
+        b.mkdir()
+        (b / "513.TESTFC.DAT").write_text("\n".join(DAT_LINES) + "\n")
+        demux_to_parquet(spark, str(b), spec, wh)
+        ids = spark.read.parquet(f"{wh}/RECH1").select("surveyid").distinct().collect()
+        assert sorted(str(r["surveyid"]) for r in ids) == ["511", "513"]
+
+        staging = tmp_path / "staging"
+        staging.mkdir()
+        (staging / "514.TESTFC.dcf").write_text(DCF_TEXT)
+        (staging / "514.TESTFC.dat").write_text("\n".join(DAT_LINES) + "\n")
+        run_pipeline(spark, str(staging), wh)
+        assert spark.conf.get(key) == "static"
+        ids = spark.read.parquet(f"{wh}/RECH1").select("surveyid").distinct().collect()
+        assert sorted(str(r["surveyid"]) for r in ids) == ["511", "513", "514"]
+    finally:
+        spark.conf.set(key, before)
+
+
+def _wide_spec(payload_names, extra_keys=()):
+    """One map-packed record ``W50``: CASEID at 1-15, the tag at 16-18,
+    then ``extra_keys`` (two chars each) and one-char payload items."""
+    from dhs_to_database_spark.sources.fixed_width import DatSpec, FieldSpec, RecordSpec
+
+    fields = [FieldSpec("CASEID", 1, 15)]
+    fields += [FieldSpec(n, 19 + 2 * i, 2) for i, n in enumerate(extra_keys)]
+    start = 19 + 2 * len(extra_keys)
+    fields += [FieldSpec(n, start + i, 1) for i, n in enumerate(payload_names)]
+    return DatSpec(rt_start=16, rt_len=3, records={"W50": RecordSpec("WIDE", "W50", tuple(fields))})
+
+
+def test_packed_item_names_come_back_verbatim(spark, tmp_path):
+    """DCF item names are external input: names holding a quote, a
+    backtick, a backslash, a space and non-ASCII letters come back verbatim
+    as packed map keys, in spec order, and a key column named that way
+    keeps its name."""
+    from dhs_to_database_spark.sources.fixed_width import packed_record_names
+
+    odd = ["A'B", "C`D", "E\\F", "G H", "ÑANDÚ", "日本"]
+    payload = odd + [f"WP{i:03d}" for i in range(501 - len(odd))]
+    odd_key = "X'`\\ ÉIDX"  # a key column by the 'idx' heuristic
+    spec = _wide_spec(payload, extra_keys=[odd_key])
+    assert packed_record_names(spec) == {"WIDE"}
+    caseid = f"{901:>4}{7:>11}"
+    body = "abcdéf" + "".join(str(i % 10) for i in range(len(payload) - 6))
+    d = tmp_path / "dat"
+    d.mkdir()
+    (d / "901.W.dat").write_text(f"{caseid}W50 9{body}\n", encoding="utf-8")
+    out = demux_to_parquet(spark, str(d), spec, str(tmp_path / "wh"))
+
+    back = spark.read.parquet(out["WIDE"])
+    assert back.columns == ["CASEID", odd_key, "data", "surveyid"]
+    # to_json keeps the map's key order; a collected dict does not
+    row = back.withColumn("json", F.to_json("data")).collect()[0]
+    assert row[odd_key] == "9"
+    data = json.loads(row["json"])
+    assert list(data) == payload
+    assert [data[n] for n in odd] == ["a", "b", "c", "d", "é", "f"]
+
+
+def test_packed_projection_construction_is_bounded(spark, monkeypatch):
+    """The packed projection of a 520-field record is built as one
+    expression: a bounded number of py4j round trips, counted by wrapping
+    ``GatewayClient.send_command``. A Column chain per field cost 45,907.
+    Only this thread's calls count: py4j's finalizer thread sends the
+    release of objects garbage-collected at any time."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    from dhs_to_database_spark.sources.fixed_width import project_packed
+
+    spec = _wide_spec([f"WP{i:03d}" for i in range(520)])
+    tagged = spark.createDataFrame(
+        [("x" * 540, "W50", "901")], "value string, record_type string, surveyid string"
+    )
+    calls = 0
+    send = GatewayClient.send_command
+    me = threading.get_ident()
+
+    def counting(client, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return send(client, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    project_packed(tagged, spec.records["W50"])
+    monkeypatch.undo()
+    assert calls < 200, calls

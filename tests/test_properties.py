@@ -4,17 +4,26 @@ DCF value-range expansion strategies."""
 
 from __future__ import annotations
 
+import json
+import random
 import string
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from pyspark.sql import functions as F
+
+from dhs_to_database_spark.plans.schema_evolution import pack_wide_table
 from dhs_to_database_spark.sources.cspro_dcf import parse_dcf_text
 from dhs_to_database_spark.sources.fixed_width import (
     DatSpec,
     FieldSpec,
     RecordSpec,
     demux_dat,
+    demux_to_parquet,
+    packed_record_names,
+    project_record,
+    read_tagged_lines,
 )
 
 # ---------------------------------------------------------------------------
@@ -108,6 +117,71 @@ def test_fixed_width_roundtrip(spark, tmp_path_factory, case):
             (tuple(g[f.name] for f in rec.fields) for g in got), key=nullsafe
         )
         assert got_sorted == want
+
+
+# ---------------------------------------------------------------------------
+# Packed-vs-columnar parity: a record past the >500 payload-column rule is
+# written map-packed by demux_to_parquet's one-expression projection. Its
+# key columns and ``data`` map (through to_json, so key order counts) must
+# equal pack_wide_table(project_record(..)), the DataFrame-level pack of the
+# columnar projection, and each value must be the trimmed CHARACTER slice
+# of the line. Lines carry blank fields, stop short of the record, and hold
+# multi-byte UTF-8 characters that shift byte positions off char positions.
+# ---------------------------------------------------------------------------
+
+_PACKED_CHARS = "   7Aé日"
+
+
+@st.composite
+def packed_case(draw):
+    rng = random.Random(draw(st.integers(0, 2**32 - 1)))
+    n_payload = draw(st.integers(501, 504))
+    fields = [FieldSpec("CASEID", 1, 4), FieldSpec("HVIDX", 8, 2)]
+    start = 10
+    for i in range(n_payload):
+        width = rng.randint(1, 3)
+        fields.append(FieldSpec(f"P{i:03d}", start, width))
+        start += width
+    lines = []
+    for row in range(draw(st.integers(1, 4))):
+        body = "".join(rng.choice(_PACKED_CHARS) for _ in range(start - 8))
+        cut = draw(st.integers(0, len(body)))  # fields past the end of a short line
+        lines.append(f"{row:>4}W50{body[:cut]}")
+    rec = RecordSpec("WIDE", "W50", tuple(fields))
+    return DatSpec(rt_start=5, rt_len=3, records={"W50": rec}), lines
+
+
+@given(packed_case())
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_packed_demux_matches_pack_of_columnar(spark, tmp_path_factory, case):
+    spec, lines = case
+    rec = spec.records["W50"]
+    assert packed_record_names(spec) == {"WIDE"}
+    d = tmp_path_factory.mktemp("packed")
+    path = d / "778.PACK.DAT"
+    path.write_text("\n".join(lines) + "\n", encoding="utf-8")
+
+    out = demux_to_parquet(spark, str(path), spec, str(d / "wh"))
+    got = spark.read.parquet(out["WIDE"])
+    oracle = pack_wide_table(project_record(read_tagged_lines(spark, str(path), spec), rec))
+    assert oracle.columns == ["surveyid", "CASEID", "HVIDX", "data"]
+    assert got.columns == ["CASEID", "HVIDX", "data", "surveyid"]  # partition col last
+
+    def rows(df):
+        return sorted(
+            df.select("CASEID", "HVIDX", "surveyid", F.to_json("data").alias("data")).collect()
+        )
+
+    got_rows = rows(got)
+    assert got_rows == rows(oracle)
+    payload = [f for f in rec.fields if f.name not in ("CASEID", "HVIDX")]
+    for line, r in zip(lines, got_rows):  # CASEID is the row number, so sorted = line order
+        want = [(f.name, line[f.start - 1 : f.start - 1 + f.length].strip(" ")) for f in payload]
+        assert list(json.loads(r["data"]).items()) == want
 
 
 # ---------------------------------------------------------------------------
