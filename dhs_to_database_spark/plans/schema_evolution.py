@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from itertools import chain
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # JSON/map packing policy (lib04:12, :140-152)
@@ -25,6 +25,13 @@ _CS_LABEL_MARKERS = ("cs:", "country specific")
 
 # join-key heuristic (lib04:124-137)
 _KEY_EXACT = {"surveyid", "caseid", "mcaseid", "hhid"}
+
+
+def _col(name: str) -> Column:
+    """Column by its literal name. DCF item names are arbitrary text, so the
+    name is backtick-quoted: a dot, space or backtick in it is not parsed
+    as a struct path or as syntax."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def is_key_column(name: str) -> bool:
@@ -78,11 +85,11 @@ def pack_wide_table(df: DataFrame, key_columns: list[str] | None = None) -> Data
     # asymmetry is the reference's own, pinned here deliberately.
     kv = list(
         chain.from_iterable(
-            (F.lit(c), F.coalesce(F.col(c).cast("string"), F.lit("")))
+            (F.lit(c), F.coalesce(_col(c).cast("string"), F.lit("")))
             for c in payload
         )
     )
-    return df.select(*keys, F.create_map(*kv).alias("data"))
+    return df.select(*map(_col, keys), F.create_map(*kv).alias("data"))
 
 
 def unpack_map_field(df: DataFrame, field: str) -> DataFrame:
@@ -96,7 +103,7 @@ def align_to_union_schema(df: DataFrame, all_columns: list[str]) -> DataFrame:
     ordering is normalized so unions are positional-safe."""
     present = set(df.columns)
     cols = [
-        F.col(c) if c in present else F.lit(None).cast("string").alias(c) for c in all_columns
+        _col(c) if c in present else F.lit(None).cast("string").alias(c) for c in all_columns
     ]
     return df.select(*cols)
 
@@ -107,10 +114,10 @@ def overwrite_survey_partition(
     """Idempotent per-survey drop-and-reload (A22; lib03:316-363,
     lib04:509-541): dynamic partition overwrite replaces exactly the
     ``surveyid=<x>`` partition, leaving other surveys untouched."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         df.withColumn("surveyid", F.lit(surveyid))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("surveyid")
         .parquet(dest)
     )
@@ -158,7 +165,7 @@ def validate_widths(df: DataFrame, items_df: DataFrame, record_name: str) -> Dat
     Returns columns where data exceeds spec (should be empty)."""
     spec = union_of_columns_schema(items_df, record_name)
     actuals = [
-        F.max(F.length(F.col(c))).alias(c) for c in df.columns if c not in ("surveyid",)
+        F.max(F.length(_col(c))).alias(c) for c in df.columns if c not in ("surveyid",)
     ]
     melted = df.agg(*actuals)
     rows = melted.collect()[0].asDict() if actuals else {}

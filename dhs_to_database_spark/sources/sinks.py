@@ -27,12 +27,13 @@ def write_partitioned(
     dest: str,
     partition_cols: tuple[str, ...] = ("surveyid",),
     mode: str = "overwrite",
-    dynamic: bool = True,
 ) -> None:
-    spark = df.sparkSession
-    if dynamic:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(dest)
+    (
+        df.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(dest)
+    )
 
 
 def jdbc_options(

@@ -282,11 +282,10 @@ def stream_to_partitioned(
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         (
             batch_df.withColumn("__batch_id__", F.lit(batch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_cols, "__batch_id__")
             .parquet(dest)
         )

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dhs_to_database_spark.plans.schema_evolution import (
@@ -15,9 +16,12 @@ from dhs_to_database_spark.plans.schema_evolution import (
     spec_diff,
     union_of_columns_schema,
     unpack_map_field,
+    validate_widths,
 )
 from dhs_to_database_spark.sources.cspro_dcf import parse_dcf_text
 from tests.fixtures_cspro import DCF_TEXT
+
+_ODD_NAMES = ["C`D", "a.b", "it's", "x y", "é"]
 
 
 def test_key_column_heuristic():
@@ -74,6 +78,17 @@ def test_pack_and_unpack_roundtrip(spark):
     j = packed.select(F.to_json("data").alias("j")).collect()[0]["j"]
     assert '"sh110a":"5"' in j
 
+    # DCF item names are arbitrary text: none may be parsed as a column path
+    odd = spark.createDataFrame(
+        [("511",) + tuple(str(i) for i in range(len(_ODD_NAMES)))],
+        ["surveyid", *_ODD_NAMES],
+    )
+    packed = pack_wide_table(odd)
+    assert packed.collect()[0]["data"] == {n: str(i) for i, n in enumerate(_ODD_NAMES)}
+    keyed = pack_wide_table(odd, key_columns=["surveyid", "a.b"])
+    assert keyed.columns == ["surveyid", "a.b", "data"]
+    assert keyed.collect()[0]["a.b"] == "1"
+
 
 def test_align_and_evolved_read(spark, tmp_path):
     """A22/A26: per-survey partition overwrite + mergeSchema read gives the
@@ -96,6 +111,65 @@ def test_align_and_evolved_read(spark, tmp_path):
     aligned = align_to_union_schema(s1, ["hhid", "hv105", "hv499"])
     assert aligned.columns == ["hhid", "hv105", "hv499"]
     assert aligned.filter(F.col("hv499").isNull()).count() == 2
+
+    odd = spark.createDataFrame([("h1", "x", "yy")], ["hhid", "C`D", "a.b"])
+    aligned = align_to_union_schema(odd, ["hhid", *_ODD_NAMES])
+    assert aligned.columns == ["hhid", *_ODD_NAMES]
+    assert aligned.collect()[0].asDict() == {
+        "hhid": "h1", "C`D": "x", "a.b": "yy", "it's": None, "x y": None, "é": None,
+    }
+    items = spark.createDataFrame(
+        [("RECH1", "Item", n, "1", str(i)) for i, n in enumerate(("hhid", "C`D", "a.b"))],
+        "RecordName string, ItemType string, Name string, Len string, Start string",
+    )
+    too_wide = validate_widths(odd, items, "RECH1")
+    assert {r["name"]: r["actual_len"] for r in too_wide.collect()} == {"hhid": 2, "a.b": 2}
+
+
+@pytest.mark.parametrize(
+    "writer", ["write_partitioned", "overwrite_survey_partition", "stream_to_partitioned"]
+)
+def test_partition_overwrite_is_a_write_option(spark, tmp_path, writer):
+    """Each partitioned writer overwrites only the partitions it writes
+    through a per-write option: under a static session conf, earlier
+    partitions survive and the conf is left as it was found."""
+    from dhs_to_database_spark.sources.sinks import write_partitioned
+    from dhs_to_database_spark.streaming.events import stream_to_partitioned
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    dest = str(tmp_path / "out")
+    try:
+        if writer == "stream_to_partitioned":
+            src = str(tmp_path / "src")
+            schema = "v int, event_type string"
+            for i in range(3):  # three files -> three micro-batches
+                spark.createDataFrame([(i, "click")], schema).coalesce(1).write.mode(
+                    "append"
+                ).parquet(src)
+            stream = (
+                spark.readStream.schema(schema)
+                .option("pathGlobFilter", "*.parquet")
+                .option("maxFilesPerTrigger", "1")
+                .parquet(src)
+            )
+            stream_to_partitioned(stream, dest, str(tmp_path / "ckpt"))
+            out = spark.read.parquet(dest)
+            assert sorted(r["v"] for r in out.collect()) == [0, 1, 2]
+            assert out.select("__batch_id__").distinct().count() == 3
+        else:
+            for sid in ("A", "B"):
+                df = spark.createDataFrame([("h1", sid)], "hhid string, surveyid string")
+                if writer == "write_partitioned":
+                    write_partitioned(df, dest)
+                else:
+                    overwrite_survey_partition(spark, df.drop("surveyid"), dest, sid)
+            ids = spark.read.parquet(dest).select("surveyid").distinct().collect()
+            assert sorted(r["surveyid"] for r in ids) == ["A", "B"]
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_spec_diff_indicator(spark):

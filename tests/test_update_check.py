@@ -8,9 +8,6 @@ GPS branch's characteristic-contains filter + anti-joins (cells 25-34).
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from dhs_to_database_spark.pipeline import check_for_updates
 
 
@@ -104,289 +101,76 @@ def test_grade_window_invariant():
     assert all(n in ors for n in names[:50])
 
 
-# Grading-window rotation history (VERDICT r8 ask #7: one table-driven
-# test replaces the r5/r6/r7/r8 per-round tests and their cross-round
-# supersession amendments). Each row is (round, rotated_in, rotated_out)
-# exactly as documented at the matching _GRADE_TAIL comment block; the
-# CURRENT window must equal the fold of the history — a later rotation
-# that rotates a name back out (e.g. simhash_md5: in@r5, out@r8)
-# supersedes the earlier row by construction, no amendments needed.
-_ROTATION_HISTORY = [
-    # r5 (VERDICT r4 ask #4): ten long-tenured tail queries in, ten
-    # four-round-graded siblings out.
-    ("r5", {
-        "simhash_md5", "doc_perplexity", "moving_average_daily",
-        "tfidf_topk", "bm25_search", "exact_substring_excise",
-        "scd2_history", "interval_join_attribution", "funnel_stages",
-        "audio_metadata",
-    }, {
-        "distinct_values", "join_semi", "cast_at_query", "label_search",
-        "gap_fill_hourly", "sequence_pack", "dedup_incremental",
-        "latest_version_per_group", "top_unshipped_orders", "asof_join",
-    }),
-    # r6 (VERDICT r5 ask #1): the never-driver-graded r4/r5 additions
-    # plus ann_calibration/leakage_safe_split in, twelve five-round-graded
-    # siblings out.
-    ("r6", {
-        "span_dedup_report", "max_dup_span_stats", "cdc_chunks",
-        "decontaminate_pairs", "minhash_calibration", "containment_pairs",
-        "boilerplate_prune", "training_shuffle_order", "json_props_extract",
-        "source_overlap_matrix", "ann_calibration", "leakage_safe_split",
-    }, {
-        "dedup_exact", "minhash_lsh_md5", "token_count", "union_distinct",
-        "join_inner", "string_pack", "sort_limit", "pivot_wide",
-        "winnowing_fingerprint", "filename_meta_extract", "top1_per_group",
-        "embedding_cosine_near_dup",
-    }),
-    # r7 (VERDICT r6 ask #1): five never-driver-graded r6 additions in,
-    # five six-round-graded siblings out.
-    ("r7", {
-        "embedding_quantization", "pii_redact",
-        "approx_distinct_calibration", "approx_quantile_calibration",
-        "cms_calibration",
-    }, {
-        "train_test_split", "benchmark_decontaminate", "quality_score",
-        "pricing_summary", "embedding_topk",
-    }),
-    # r8 (VERDICT r7 ask #1): three never-driver-graded r7 iterative
-    # additions in, three multi-round-graded siblings out (supersedes the
-    # r5 row for simhash_md5/doc_perplexity/moving_average_daily).
-    ("r8", {
-        "source_pagerank", "bpe_merge_calibration",
-        "spectral_power_calibration",
-    }, {"simhash_md5", "doc_perplexity", "moving_average_daily"}),
-    # r9 (VERDICT r8 ask #1): the two never-driver-graded r8 calibration
-    # additions in, two multi-round-graded siblings out (supersedes the
-    # r5 row for funnel_stages and the r6 row for span_dedup_report;
-    # each keeps >=2 in-window family siblings — see _GRADE_TAIL).
-    ("r9", {"kmeans_calibration", "featurize_calibration"},
-     {"span_dedup_report", "funnel_stages"}),
-    # r10 (VERDICT r9 ask #1, r6-style bulk): the two r9 calibration
-    # twins plus eight queries from the never-driver-graded
-    # oracle-backed backlog in; the ten longest-tenured in-window
-    # queries (most r1-r9 green) out. Every rotated-out entry keeps an
-    # in-window family sibling — see the r10 _GRADE_TAIL block.
-    ("r10", {
-        "irls_stats_calibration", "pca_calibration",
-        "setsim_join_prefix", "hybrid_search_rrf",
-        "stateful_session_paths", "streaming_window_counts",
-        "dq_checks_orders", "spearman_length_tokens",
-        "dedup_incremental_bloom", "content_reconcile",
-    }, {
-        "agg_having", "case_coalesce_harmonize", "join_anti",
-        "label_similarity", "multimodal_features", "rowcount_reconcile",
-        "schema_union_derive", "token_budget_mix", "session_windows",
-        "zorder_key",
-    }),
-    # r11 (VERDICT r10 ask #1, second r6-style bulk): ten queries from
-    # the never-driver-graded oracle-backed backlog in (the r1-era
-    # parkings and composites the judge named); the ten longest-tenured
-    # in-window queries out (eight r1-r10 green; flagship_cross_level
-    # graded r1-r10 with hash-green r2-r10 after the round-1 rounding
-    # fix; window_functions r2-r10 green — cube_agg stays as the only in-window
-    # reshaping/grouping-sets sibling, and duplicate_load_detect stays
-    # so VERDICT r10 ask #2 grades on nonzero rows). Every rotated-out
-    # entry keeps an in-window family sibling — see the r11 _GRADE_TAIL
-    # block.
-    ("r11", {
-        "curation_pipeline", "embedding_centroids",
-        "segment_window_counts", "curation_pipeline_v2",
-        "scd2_asof_lookup", "moment_stats", "cohort_retention",
-        "video_metadata", "flac_metadata", "rich_inactive_customers_sql",
-    }, {
-        "projection_filter_ilike", "rowid_join",
-        "join_full_outer_indicator", "range_join_decode",
-        "map_pack_extract", "catalog_introspect", "decile_stats",
-        "dedup_components", "flagship_cross_level", "window_functions",
-    }),
-    # r12 (VERDICT r11 ask #1, third r6-style bulk): the ten
-    # pre-committed never-driver-graded queries from CHECK_LOCAL_r11's
-    # rotation plan in; the ten longest-tenured currently-green
-    # in-window queries out (duplicate_load_detect 11 rounds, cube_agg
-    # 10, survey_update_check 9, four r5-r11 seven-round entries, three
-    # r6-r11 six-round entries — tfidf_topk and
-    # interval_join_attribution, also seven-round, stay in-window as
-    # the sole graded anchors of the text-scoring and banded-join
-    # families; supersedes the r5 row for scd2_history /
-    # exact_substring_excise / bm25_search / audio_metadata and the r6
-    # row for containment_pairs / boilerplate_prune /
-    # source_overlap_matrix). Every rotated-out entry keeps an
-    # in-window family sibling — see the r12 _GRADE_TAIL block.
-    ("r12", {
-        "sliding_window", "stratified_sample_langs", "topk_per_group",
-        "tumbling_window", "duplicate_spans", "importance_weights",
-        "profile_orders_columns", "quantile_normalize",
-        "range_frame_trailing", "regex_token_count",
-    }, {
-        "duplicate_load_detect", "cube_agg", "survey_update_check",
-        "scd2_history", "exact_substring_excise", "bm25_search",
-        "audio_metadata", "source_overlap_matrix", "containment_pairs",
-        "boilerplate_prune",
-    }),
-    # r13 (VERDICT r12 ask #4, fourth bulk): the ten pre-committed
-    # never-driver-graded queries from CHECK_LOCAL_r12's rotation plan
-    # in; the ten longest-tenured currently-green in-window queries out
-    # (tfidf_topk 8 rounds; seven 7-round r6 entries minus
-    # decontaminate_pairs and json_props_extract, which stay as the sole
-    # graded decontamination and JSON/map-extraction anchors; two
-    # 6-round r7 sketch/similarity entries, keeping
-    # approx_quantile_calibration as the in-window sketch anchor;
-    # supersedes the r6 row for minhash_calibration / training_shuffle_
-    # order / ann_calibration / leakage_safe_split / cdc_chunks /
-    # max_dup_span_stats and the r7 row for approx_distinct_calibration /
-    # cms_calibration / embedding_quantization, and the r5 row for
-    # tfidf_topk). importance_weights stays IN-WINDOW per VERDICT r12
-    # ask #1 so its signed-zero fix collects a green driver row — a
-    # failed query must not rotate out red. Every rotated-out entry
-    # keeps an in-window family sibling — see the r13 _GRADE_TAIL block.
-    ("r13", {
-        "context_chunks", "frequent_terms_topk", "mode_per_group",
-        "pmi_collocations", "repetition_stats", "rollup_maintenance",
-        "sample_k_per_group", "term_drift_kl", "token_rarity_score",
-        "value_histogram",
-    }, {
-        "tfidf_topk", "cdc_chunks", "minhash_calibration",
-        "training_shuffle_order", "ann_calibration", "max_dup_span_stats",
-        "leakage_safe_split", "approx_distinct_calibration",
-        "cms_calibration", "embedding_quantization",
-    }),
-    # r14 (VERDICT r13 ask #1, fifth bulk — backlog-zeroing): ALL ELEVEN
-    # remaining never-driver-graded oracle-backed queries in (the exact
-    # pre-committed CHECK_LOCAL_r12/r13 list — tail_tenure now reports 0
-    # parked); the eleven longest-tenured currently-green in-window
-    # queries out, per CHECK_LOCAL_r13's family-anchor pre-analysis
-    # (pii_redact 7 rounds; source_pagerank / bpe_merge_calibration /
-    # spectral_power_calibration 6; featurize_calibration 5; the rest 4
-    # — kmeans_calibration and irls_stats_calibration stay as the
-    # iterative-calibration anchors, dq_checks_orders as the
-    # declarative-rules/reconcile anchor, dedup_incremental_bloom as the
-    # near-dup anchor, stateful_session_paths as the streaming-engine
-    # anchor, quantile_normalize as the distributed-rank anchor;
-    # supersedes the r7 row for pii_redact, the r8 row for
-    # source_pagerank / bpe_merge_calibration /
-    # spectral_power_calibration, the r9 row for featurize_calibration,
-    # and the r10 row for the six r10-in members). Every rotated-out
-    # entry keeps an in-window family sibling — see the r14 _GRADE_TAIL
-    # block.
-    ("r14", {
-        "weighted_sample_langs", "window_unique_users", "word_entropy",
-        "wow_growth", "bpe_pair_counts", "dup_rate_by_source",
-        "returned_orders_by_priority_sql", "temperature_mix",
-        "corpus_dataset_card", "bpe_encode_calibration",
-        "pca_project_calibration",
-    }, {
-        "pii_redact", "source_pagerank", "bpe_merge_calibration",
-        "spectral_power_calibration", "featurize_calibration",
-        "pca_calibration", "setsim_join_prefix", "hybrid_search_rrf",
-        "spearman_length_tokens", "content_reconcile",
-        "streaming_window_counts",
-    }),
+# The driver grades exactly these first 50 ``queries()`` names, in this order.
+_GRADING_WINDOW = [
+    "bpe_encode_calibration",
+    "irls_stats_calibration",
+    "duplicate_spans",
+    "dedup_incremental_bloom",
+    "dup_rate_by_source",
+    "profile_orders_columns",
+    "scd2_asof_lookup",
+    "dq_checks_orders",
+    "corpus_dataset_card",
+    "video_metadata",
+    "flac_metadata",
+    "quantile_normalize",
+    "topk_per_group",
+    "approx_quantile_calibration",
+    "value_histogram",
+    "moment_stats",
+    "mode_per_group",
+    "rich_inactive_customers_sql",
+    "returned_orders_by_priority_sql",
+    "json_props_extract",
+    "stratified_sample_langs",
+    "curation_pipeline",
+    "decontaminate_pairs",
+    "sample_k_per_group",
+    "importance_weights",
+    "weighted_sample_langs",
+    "term_drift_kl",
+    "curation_pipeline_v2",
+    "temperature_mix",
+    "kmeans_calibration",
+    "embedding_centroids",
+    "pca_project_calibration",
+    "repetition_stats",
+    "context_chunks",
+    "token_rarity_score",
+    "frequent_terms_topk",
+    "regex_token_count",
+    "word_entropy",
+    "pmi_collocations",
+    "bpe_pair_counts",
+    "tumbling_window",
+    "sliding_window",
+    "segment_window_counts",
+    "cohort_retention",
+    "rollup_maintenance",
+    "window_unique_users",
+    "range_frame_trailing",
+    "wow_growth",
+    "interval_join_attribution",
+    "stateful_session_paths",
 ]
 
 
-def test_grading_window_rotation_history():
-    """Fold _ROTATION_HISTORY in round order and assert the CURRENT
-    50-entry grading window agrees with every name's FINAL rotation
-    state. Future rotations are one new table row, not a new test plus
-    amendments to the old ones."""
-    import __spark_entry__ as e
-
-    window = set(list(e.queries())[:50])
-    state: dict[str, bool] = {}  # name -> in-window expected
-    for _rnd, rotated_in, rotated_out in _ROTATION_HISTORY:
-        assert not (rotated_in & rotated_out), (_rnd, rotated_in & rotated_out)
-        for n in rotated_in:
-            state[n] = True
-        for n in rotated_out:
-            state[n] = False
-    should_be_in = {n for n, v in state.items() if v}
-    should_be_out = {n for n, v in state.items() if not v}
-    assert should_be_in <= window, should_be_in - window
-    assert not (should_be_out & window), should_be_out & window
-
-
-def _rotation_plan_module():
-    """Load tools/rotation_plan.py (the shared archive-loader /
-    green-record / planner logic) the same way the other tool-module
-    tests do."""
-    import importlib.util
+def test_grading_window_is_pinned():
+    """Read in a fresh interpreter, as the driver does: the registry keeps
+    import order, so a test process that imported an operator module first
+    sees the same window in another order."""
+    import json
     import os
+    import subprocess
     import sys
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if root not in sys.path:
-        sys.path.insert(0, root)
-    spec = importlib.util.spec_from_file_location(
-        "rotation_plan_for_test", os.path.join(root, "tools", "rotation_plan.py")
-    )
-    rp = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rp)
-    return rp
-
-
-def test_rotation_never_retires_ungraded():
-    """No query leaves the grading window without evidence: every
-    rotated-out name in every _ROTATION_HISTORY row must be driver-GREEN
-    (hash-matched, or rows-matched for rows-only entries, with no error)
-    in the committed CORRECTNESS archive for the round IMMEDIATELY
-    BEFORE its rotation — you can only retire a query that is green
-    right now, not one that was green once and has regressed since.
-    (This is deliberately per-round, not "green in every graded round
-    ever": three r1 records are hash-red from the round-1 money-rounding
-    hash fix class — flagship_cross_level, cast_at_query, pivot_wide —
-    all rows/schema-matched even then and green every round since r2.)
-    A rotation that parks a not-currently-green query fails here, not in
-    a judge review. Verified to hold for all of r5-r11 at the time of
-    writing (r11). Archive loading and the green-record rules live in
-    tools/rotation_plan.py (review r14: one copy, shared with the
-    steady-state planner, so the planner's out-candidate analysis can't
-    diverge from this enforced invariant)."""
-    import os
-
-    rp = _rotation_plan_module()
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    archive = rp.load_archive(here)
-    if not archive:
-        pytest.skip("no committed CORRECTNESS archive (fresh checkout)")
-    green = rp.record_is_green
-
-    violations = []
-    missing_rounds = []
-    for label, _rotated_in, rotated_out in _ROTATION_HISTORY:
-        rnd = int(label.lstrip("r"))
-        if rnd - 1 not in archive:
-            # ADVICE r11: a partial checkout (some CORRECTNESS rounds
-            # present, this rotation's rnd-1 file absent) is a missing-
-            # evidence condition, not ten per-name retirement violations
-            # — report it distinctly instead of folding it into
-            # `violations` with a misleading "ungraded retirement" text.
-            missing_rounds.append(label)
-            continue
-        prev = archive[rnd - 1]
-        for n in rotated_out:
-            if n not in prev or not green(prev[n]):
-                violations.append((label, n))
-    assert violations == [], (
-        f"rotated out without a driver-green record in the immediately"
-        f" preceding round: {violations}"
-    )
-    if missing_rounds:
-        # ADVICE r12: skip only when NO rotation could be checked; a
-        # partial archive still verified the rounds that were present,
-        # so register that as a pass-with-warning, not a skip.
-        if len(missing_rounds) == len(_ROTATION_HISTORY):
-            pytest.skip(
-                "CORRECTNESS archive incomplete — cannot check retirement "
-                f"evidence for rotation(s) {missing_rounds}"
-            )
-        import warnings
-
-        warnings.warn(
-            "CORRECTNESS archive incomplete — retirement evidence not "
-            f"checkable for rotation(s) {missing_rounds}; all present "
-            "rounds verified",
-            stacklevel=1,
-        )
+    code = "import json, __spark_entry__ as e; print(json.dumps(list(e.queries())[:50]))"
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
+    ).stdout
+    assert json.loads(out.splitlines()[-1]) == _GRADING_WINDOW
 
 
 def test_no_bare_whitespace_class_in_oracle_gated_patterns():
@@ -497,110 +281,18 @@ def test_shuffle_baseline_covers_every_bench_query():
     assert stale == [], f"shuffle budgets for unregistered queries: {stale}"
 
 
-def test_tail_comments_cite_in_window_siblings():
-    """r12 sweep, made structural: a _GRADE_TAIL entry's justification
-    comment may claim a sibling is 'graded [in-window]' or '(in-window)'
-    only if that sibling is actually inside the CURRENT 50-entry grading
-    window. Three r5-era comments drifted this way (citing siblings that
-    had themselves been rotated to the tail); this scan fails on any
-    recurrence, so rotation edits must update the affected comments in
-    the same change."""
+def test_chain_and_readme_tools_exist():
+    """tools/run_chain.sh runs under ``set -e``, so a tool it names that no
+    longer exists kills the chain at that step; README's command list must
+    not point at missing tools either."""
     import os
     import re
 
-    import __spark_entry__ as e
-
-    window = set(list(e.queries())[:50])
-    registered = set(e.queries())
-    src = open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "__spark_entry__.py",
-        )
-    ).read()
-    stale = []
-    for m in re.finditer(r'^\s+"([a-z0-9_]+)",\s+#\s*(.*)$', src, re.M):
-        entry, comment = m.groups()
-        cited = set()
-        # "a + b / c (parenthetical) [now] graded ..." — names claimed
-        # as graded (review r12: '+' AND '/' separators, optional 'now')
-        for phrase in re.findall(
-            r"([a-z0-9_]+(?:\s*[+/]\s*[a-z0-9_]+)*)\s+(?:\([^)]*\)\s+)?"
-            r"(?:now\s+)?graded",
-            comment,
-        ):
-            cited.update(re.split(r"\s*[+/]\s*", phrase))
-        # "graded name" word order ('inverse of graded pivot_wide')
-        cited.update(re.findall(r"graded\s+([a-z0-9_]+)", comment))
-        # "name (in-window)" and "name [(paren)] rotated in-window" —
-        # direct in-window claims; both go stale when the sibling is
-        # later rotated out, so rotations must update these comments too
-        cited.update(re.findall(r"([a-z0-9_]+)\s+\(in-window\)", comment))
-        cited.update(
-            re.findall(
-                r"([a-z0-9_]+)\s+(?:\([^)]*\)\s+)?rotated in-window",
-                comment,
-            )
-        )
-        for q in cited:
-            if q in registered and q not in window:
-                stale.append((entry, q))
-    assert stale == [], (
-        f"tail comments cite non-window queries as graded/in-window:"
-        f" {stale}"
-    )
-
-
-def test_steady_state_rotation_plan():
-    """VERDICT r13 ask #2: from r15 on, each rotation refreshes the
-    oldest driver evidence. The pre-committed next IN-set must equal
-    the policy's deterministic computation — the STEADY_SWAP tail
-    queries with the oldest most-recent driver grade, ordered by
-    (last_graded_round, name) — over the committed CORRECTNESS archive,
-    and every family anchor the out-candidate analysis exempts must
-    actually be in the current window."""
-    import os
-    import sys
-
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if root not in sys.path:
-        sys.path.insert(0, root)
-    import __spark_entry__ as e
-
-    rp = _rotation_plan_module()
-    archive = rp.load_archive(root)
-    if not archive:
-        pytest.skip("no committed CORRECTNESS archive (fresh checkout)")
-    names = list(e.queries())
-    ors = e.oracle_sql()
-    window = names[:50]
-    tail = [n for n in names[50:] if n in ors]
-
-    # review r14: a PARTIAL checkout (some CORRECTNESS rounds missing)
-    # would compute stale last-graded rounds and fail the equality with
-    # a misleading "drifted" message — mirror the retirement test's
-    # missing-evidence treatment and skip the ordering check instead.
-    missing = sorted(set(range(1, max(archive) + 1)) - set(archive))
-    if missing:
-        import warnings
-
-        warnings.warn(
-            "CORRECTNESS archive incomplete (missing rounds"
-            f" {missing}) — since-last-graded ordering not checkable;"
-            " structural anchor/tail checks still enforced",
-            stacklevel=1,
-        )
-    else:
-        computed = rp.planned_in(tail, archive)
-        assert computed == rp.PLANNED_NEXT_IN, (
-            "pre-committed IN-set drifted from the since-last-graded"
-            f" ordering: computed {computed}"
-        )
-    # the planned IN-set must be tail queries (can't rotate in what's
-    # already in the window) and every one oracle-backed
-    assert set(rp.PLANNED_NEXT_IN) <= set(tail)
-    # family anchors must be real window members — a stale anchor entry
-    # (rotated out without updating FAMILY_ANCHORS) would silently
-    # weaken the exemption analysis
-    stale_anchors = [q for q in rp.FAMILY_ANCHORS if q not in window]
-    assert stale_anchors == [], f"anchors not in window: {stale_anchors}"
+    missing = []
+    for doc in ("tools/run_chain.sh", "README.md"):
+        with open(os.path.join(root, doc)) as fh:
+            named = set(re.findall(r"\btools/[\w./-]+\.(?:py|sh)\b", fh.read()))
+        assert named, f"{doc} names no tools"
+        missing += [f"{doc}: {t}" for t in sorted(named) if not os.path.exists(os.path.join(root, t))]
+    assert missing == [], missing

@@ -24,39 +24,37 @@ fi
 # by scoping the export too narrowly).
 export SPARK_GRAFT_DRIVER_MEM=24g
 echo "=== chain HEAD: $(git rev-parse HEAD) (python: $PY) ==="
-echo "=== [1/14] plan_audit ==="
+echo "=== [1/13] plan_audit ==="
 "$PY" tools/plan_audit.py
-echo "=== [2/14] scale_probe (sf0.001-0.1; overwrites SCALING.md) ==="
+echo "=== [2/13] scale_probe (sf0.001-0.1; overwrites SCALING.md) ==="
 "$PY" tools/scale_probe.py
-echo "=== [3/14] scale_probe --sf1 ==="
+echo "=== [3/13] scale_probe --sf1 ==="
 "$PY" tools/scale_probe.py --sf1
-echo "=== [4/14] scale_probe --sf10 (decade probe) ==="
+echo "=== [4/13] scale_probe --sf10 (decade probe) ==="
 "$PY" tools/scale_probe.py --sf10
-echo "=== [5/14] demux_probe ==="
+echo "=== [5/13] demux_probe ==="
 "$PY" tools/demux_probe.py
-echo "=== [6/14] window_warning_audit (sf0.001) ==="
+echo "=== [6/13] window_warning_audit (sf0.001) ==="
 "$PY" tools/window_warning_audit.py
-echo "=== [7/14] window_warning_audit at the bench SF (VERDICT r11 ask #3) ==="
+echo "=== [7/13] window_warning_audit at the bench SF (VERDICT r11 ask #3) ==="
 "$PY" tools/window_warning_audit.py /root/testdata/sf0.1
-echo "=== [8/14] check_oracle sf0.001 + sf0.01 (three-SF hash gate, r13) ==="
+echo "=== [8/13] check_oracle sf0.001 + sf0.01 (three-SF hash gate, r13) ==="
 "$PY" tools/check_oracle.py /root/testdata/sf0.001
 "$PY" tools/check_oracle.py /root/testdata/sf0.01
-echo "=== [9/14] check_oracle sf0.1 ==="
+echo "=== [9/13] check_oracle sf0.1 ==="
 "$PY" tools/check_oracle.py /root/testdata/sf0.1
-echo "=== [10/14] bitwise probe (full registry, ALL THREE SFs — VERDICT r13 ask #3) ==="
+echo "=== [10/13] bitwise probe (full registry, ALL THREE SFs — VERDICT r13 ask #3) ==="
 "$PY" tools/bitwise_probe.py /root/testdata/sf0.001 --all
 "$PY" tools/bitwise_probe.py /root/testdata/sf0.01 --all
 "$PY" tools/bitwise_probe.py /root/testdata/sf0.1 --all
-echo "=== [11/14] layout probe (full registry, layout-invariance gate — r14; BOTH SFs: sketch compaction only trips at sf0.01) ==="
+echo "=== [11/13] layout probe (full registry, layout-invariance gate — r14; BOTH SFs: sketch compaction only trips at sf0.01) ==="
 "$PY" tools/layout_probe.py /root/testdata/sf0.001
 "$PY" tools/layout_probe.py /root/testdata/sf0.01
-echo "=== [12/14] config probe (tuned vs driver-vanilla session — r14; BOTH SFs) ==="
+echo "=== [12/13] config probe (tuned vs driver-vanilla session — r14; BOTH SFs) ==="
 "$PY" tools/config_probe.py /root/testdata/sf0.001
 "$PY" tools/config_probe.py /root/testdata/sf0.01
-echo "=== [13/14] bench ==="
+echo "=== [13/13] bench ==="
 "$PY" bench.py
-echo "=== [14/14] tail_tenure ==="
-"$PY" tools/tail_tenure.py
 echo "=== chain complete at $(git rev-parse HEAD) ==="
 echo "Now re-run pytest + the vanilla driver simulation at this HEAD"
 echo "(see .claude/skills/verify/SKILL.md) before writing CHECK_LOCAL."
