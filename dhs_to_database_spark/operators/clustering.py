@@ -105,7 +105,7 @@ def connected_components(
     edge. Nodes with no edges are absent; union them in with
     ``component = node`` if singletons matter (the query below does).
 
-    Tiered like ``ranking.global_rank``: the canonical edge count is
+    Tiered by observed size: the canonical edge count is
     observed during the first checkpoint job (zero extra jobs); at or
     under ``driver_threshold`` the edges collect into a driver-side
     min-label union-find, above it the distributed large/small-star loop

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import math
+import os
+import shutil
 import tempfile
 
 from ..sources.tables import load_table
@@ -41,21 +43,37 @@ from .util import local_rows_df, spread_narrow_cpu
 # computed once per corpus snapshot, reused across every dedup run (the
 # production pattern; recomputing a full-corpus shingle explode per query
 # would dominate). Locally we mirror that with a session-scoped temp
-# parquet keyed by (artifact, corpus dir): first use builds, later uses
-# read parquet. Unlike ``.persist()`` this pins NOTHING in block-manager
+# parquet keyed by (artifact, corpus dir) and stamped with the snapshot of
+# the input table (its files' names, sizes and mtimes): first use builds,
+# later uses read parquet, and a rewritten input rebuilds and deletes the
+# superseded copy. Unlike ``.persist()`` this pins NOTHING in block-manager
 # storage, survives executor loss, and cannot leak cache entries into a
 # shared session (r1 judge finding).
 # ---------------------------------------------------------------------------
 
-_ARTIFACTS: dict[tuple[str, str], str] = {}
+_ARTIFACTS: dict[tuple[str, str], tuple[tuple, str]] = {}
 
 
-def _materialized_artifact(spark: SparkSession, kind: str, corpus: str, build) -> DataFrame:
-    path = _ARTIFACTS.get((kind, corpus))
-    if path is None:
+def _snapshot(path: str) -> tuple:
+    """(name, size, mtime) of every file of a table, a file or a directory."""
+    files = [path] if os.path.isfile(path) else sorted(
+        os.path.join(d, f) for d, _dirs, fs in os.walk(path) for f in fs
+    )
+    stats = ((f, os.stat(f)) for f in files)
+    return tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
+
+
+def _materialized_artifact(
+    spark: SparkSession, kind: str, corpus: str, table: str, build
+) -> DataFrame:
+    snap = _snapshot(f"{corpus}/{table}.parquet")
+    stamp, path = _ARTIFACTS.get((kind, corpus), (None, None))
+    if stamp != snap:
+        if path is not None:
+            shutil.rmtree(path, ignore_errors=True)
         path = tempfile.mkdtemp(prefix=f"dedup_{kind}_")
         build().write.mode("overwrite").parquet(path)
-        _ARTIFACTS[(kind, corpus)] = path
+        _ARTIFACTS[(kind, corpus)] = (snap, path)
     return spark.read.parquet(path)
 
 # ---------------------------------------------------------------------------
@@ -255,6 +273,7 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "minhash_sigs",
         sf_dir,
+        "documents",
         lambda: minhash_signatures(
             load_table(spark, sf_dir, "documents").select("doc_id", "text")
         ),
@@ -329,6 +348,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "simhash_bands",
         sf_dir,
+        "documents",
         lambda: simhash_bands(
             load_table(spark, sf_dir, "documents").select("doc_id", "text")
         ),
@@ -508,6 +528,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "semantic_cells",
         sf_dir,
+        "embeddings",
         lambda: ivf_assign(
             emb, kmeans_fit_sample(emb, k=_SEMANTIC_CELLS, max_iter=4)
         ),

@@ -7,26 +7,19 @@ through ONE task — the classic scale cliff. The distributed formulation:
 1. ``repartitionByRange`` on the sort key (range partitioner, sampled
    boundaries) + ``sortWithinPartitions`` — a single shuffle, the same one
    any global sort pays;
-2. ONE narrow ``mapInPandas`` pass tags each row with its partition id and
-   local 0-based row index, then the tagged frame is materialized exactly
-   once (see tiers below) so the boundary sampling can never be re-drawn;
+2. one narrow, JVM-side pass tags each row with its partition id and
+   local 0-based row index (``monotonically_increasing_id`` split into its
+   two fields), then the tagged frame is materialized exactly once with an
+   eager ``localCheckpoint`` so the boundary sampling can never be
+   re-drawn;
 3. per-partition row counts -> cumulative offsets (driver-side, one tiny
-   row per partition), broadcast-joined back;
+   row per partition), inlined as a literal map lookup — no join;
 4. ``rank = __lidx + offset[__pid] + 1`` — a pure column expression, so
    the rank no longer depends on task ordering or read-time partitioning.
 
-Materialization tiers (``materialize=``):
-
-- ``"memory"`` (default, interactive): eager ``localCheckpoint``. Fast, but
-  pins one copy of the input in block-manager storage and truncates lineage
-  — an executor loss is unrecoverable. Right for notebooks and small-to-mid
-  inputs.
-- ``"disk"`` (batch / 100 TB path): write the tagged frame to a temp
-  parquet directory and read it back. Fault-tolerant (files are re-readable
-  after executor loss), nothing pinned in executor memory, and because the
-  local index is already a stored column the read-back may split or
-  coalesce files freely without perturbing a single rank. On a cluster pass
-  ``temp_dir`` on a shared filesystem.
+The checkpoint pins one copy of the input in block-manager storage and
+truncates lineage; ``RankInputHandle.unpersist()`` releases it once the
+caller has materialized its own result.
 
 No step holds more than one partition in one task; the result is the
 exact global rank (keys must be made unique with a tie-break column —
@@ -40,9 +33,6 @@ whole-table ordering the reference never needed at Postgres scale but a
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,25 +42,22 @@ from .tokens import n_tokens
 
 
 class RankInputHandle:
-    """Releasable handle on the materialized rank input.
+    """Releasable handle on the checkpointed rank input.
 
-    ``unpersist()`` drops the pinned blocks (memory tier) or deletes the
-    temp parquet directory (disk tier). Call it once the downstream result
-    has itself been materialized — before that the ranked frame still
-    reads from this copy.
+    ``unpersist()`` drops its blocks. ``DataFrame.unpersist()`` cannot: a
+    ``localCheckpoint`` is not a cached plan, and its blocks belong to the
+    RDD behind the frame's ``LogicalRDD``. Call it once the downstream
+    result has itself been materialized — before that the ranked frame
+    still reads from this copy.
     """
 
-    def __init__(self, df: DataFrame | None = None, temp_path: str | None = None):
+    def __init__(self, df: DataFrame):
         self._df = df
-        self._path = temp_path
 
     def unpersist(self) -> None:
         if self._df is not None:
-            self._df.unpersist()
+            self._df._jdf.logicalPlan().rdd().unpersist(False)
             self._df = None
-        if self._path is not None:
-            shutil.rmtree(self._path, ignore_errors=True)
-            self._path = None
 
 
 def _tag_pid_lidx(part: DataFrame) -> DataFrame:
@@ -101,16 +88,13 @@ def global_rank_parts(
     sort_cols: list[str],
     rank_name: str = "rank",
     num_partitions: int | None = None,
-    materialize: str = "memory",
-    temp_dir: str | None = None,
 ) -> tuple[DataFrame, int, RankInputHandle]:
     """Exact 1-based global rank by ``sort_cols`` (must be a total order).
 
     Returns ``(ranked_df, total_rows, handle)``. The tagged input is
-    materialized exactly once (tier chosen by ``materialize``, see module
-    docstring); call ``handle.unpersist()`` after the downstream result is
-    materialized. ``total_rows`` comes free from the offset pass — don't
-    re-count the input.
+    checkpointed exactly once; call ``handle.unpersist()`` after the
+    downstream result is materialized. ``total_rows`` comes free from the
+    offset pass — don't re-count the input.
     """
     spark = df.sparkSession
     # r14 (guide §2.2): derive the range-partition count from the
@@ -139,17 +123,7 @@ def global_rank_parts(
     # Materialize ONE physical partitioning: range-partitioner boundary
     # sampling / AQE decisions can differ between separate executions of
     # the same lazy plan, which would shift every downstream rank.
-    tagged = _tag_pid_lidx(part)
-    if materialize == "memory":
-        tagged = tagged.localCheckpoint(eager=True)
-        handle = RankInputHandle(df=tagged)
-    elif materialize == "disk":
-        path = tempfile.mkdtemp(prefix="global_rank_", dir=temp_dir)
-        tagged.write.mode("overwrite").parquet(path)
-        tagged = spark.read.parquet(path)
-        handle = RankInputHandle(temp_path=path)
-    else:  # pragma: no cover - guard
-        raise ValueError(f"materialize must be 'memory' or 'disk', got {materialize!r}")
+    tagged = _tag_pid_lidx(part).localCheckpoint(eager=True)
 
     # One tiny row per partition; cumulative offsets computed on the driver.
     counts = {
@@ -180,7 +154,7 @@ def global_rank_parts(
         )
         .drop("__pid", "__lidx")
     )
-    return ranked, acc, handle
+    return ranked, acc, RankInputHandle(tagged)
 
 
 def global_rank(
@@ -188,15 +162,12 @@ def global_rank(
     sort_cols: list[str],
     rank_name: str = "rank",
     num_partitions: int | None = None,
-    materialize: str = "memory",
 ) -> DataFrame:
     """``global_rank_parts`` without the bookkeeping — the materialized
     copy of the input stays live for the session (fine for tests and
     one-shot jobs; long-lived sessions should use ``global_rank_parts``
     and unpersist the handle)."""
-    ranked, _, _ = global_rank_parts(
-        df, sort_cols, rank_name, num_partitions, materialize
-    )
+    ranked, _, _ = global_rank_parts(df, sort_cols, rank_name, num_partitions)
     return ranked
 
 

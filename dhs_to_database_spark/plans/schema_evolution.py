@@ -130,9 +130,16 @@ def read_evolved(spark: SparkSession, dest: str) -> DataFrame:
     Partition-column type inference is disabled for the read: ``surveyid``
     is a STRING everywhere in this engine (the reference's all-varchar rule,
     doc/Data_Format.md:222) and inference would silently turn a directory of
-    numeric survey ids into ints, breaking joins against the string keys."""
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    return spark.read.option("mergeSchema", "true").parquet(dest)
+    numeric survey ids into ints, breaking joins against the string keys.
+    The partition schema is fixed when the frame is created, so the
+    session's own setting is restored right after."""
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        return spark.read.option("mergeSchema", "true").parquet(dest)
+    finally:
+        spark.conf.set(key, prev)
 
 
 def spec_diff(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:

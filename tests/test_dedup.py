@@ -447,3 +447,31 @@ def test_hot_gram_cap_observation_reports_dropped_grams(spark, tmp_path):
     out = shared_gram_source_sets(docs, observation=obs).collect()
     assert {r["gram"] for r in out} == {good}
     assert obs.get["dropped_hot_grams"] == 1
+
+
+def test_minhash_artifact_follows_corpus_rewrite(spark, tmp_path):
+    """The signature artifact is keyed by the documents table's snapshot:
+    rewriting the corpus under the same path makes the next call rebuild
+    (a planted near-duplicate pair appears) and deletes the stale copy."""
+    import os
+
+    from dhs_to_database_spark.operators import dedup
+
+    base = [(i, " ".join(f"w{i}x{j}" for j in range(40))) for i in range(20)]
+    docs = str(tmp_path / "documents.parquet")
+
+    def write(rows):
+        spark.createDataFrame(rows, "doc_id bigint, text string").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(docs)
+
+    def pairs():
+        return {(r["doc_a"], r["doc_b"]) for r in dedup.minhash_near_dup(spark, str(tmp_path)).collect()}
+
+    write(base)
+    assert pairs() == set()
+    stale = dedup._ARTIFACTS[("minhash_sigs", str(tmp_path))][1]
+    planted = base[0][1].rsplit(" ", 1)[0] + " changed"  # doc 0 with its last word swapped
+    write([(i, planted if i == 1 else t) for i, t in base])
+    assert pairs() == {(0, 1)}
+    assert not os.path.exists(stale)

@@ -98,9 +98,19 @@ def test_align_and_evolved_read(spark, tmp_path):
     s2 = spark.createDataFrame([("h3", "7", "x")], ["hhid", "hv105", "hv499"])
     overwrite_survey_partition(spark, s1, dest, "511")
     overwrite_survey_partition(spark, s2, dest, "512")
-    evolved = read_evolved(spark, dest)
-    assert set(evolved.columns) == {"hhid", "hv105", "hv499", "surveyid"}
-    assert evolved.count() == 3
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        evolved = read_evolved(spark, dest)
+        assert spark.conf.get(key) == "true"  # the session conf is left as found
+        assert set(evolved.columns) == {"hhid", "hv105", "hv499", "surveyid"}
+        assert evolved.count() == 3
+        # the numeric-looking survey ids stay strings in later actions too
+        assert dict(evolved.dtypes)["surveyid"] == "string"
+        assert sorted(r[0] for r in evolved.select("surveyid").distinct().collect()) == ["511", "512"]
+    finally:
+        spark.conf.set(key, prev)
     nulls = evolved.filter(F.col("hv499").isNull()).count()
     assert nulls == 2  # survey 511 rows are sparse on the new column
 
