@@ -11,6 +11,7 @@ their judge-facing queries in ``dhs_to_database_spark.operators.registry``.
 
 from __future__ import annotations
 
+import importlib
 import os
 import sys
 from collections.abc import Callable
@@ -22,25 +23,36 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 
+# Every module that registers queries, in the order ``queries()`` lists
+# them. The order is fixed here rather than taken from the registry's
+# insertion order, which depends on what a process imported first.
+_QUERY_MODULES = tuple(
+    f"dhs_to_database_spark.{m}"
+    for m in (
+        "operators.bpe",
+        "operators.classifier",
+        "operators.dedup",
+        "operators.clustering",
+        "operators.layout",
+        "operators.metadata",
+        "operators.multimodal",
+        "operators.ranking",
+        "operators.relational",
+        "operators.sampling",
+        "operators.similarity",
+        "operators.text_analysis",
+        "operators.windows",
+        "streaming.events",
+        "streaming.stateful",
+    )
+)
+
+
 def _registry():
     # Importing the operator modules populates the registry.
-    from dhs_to_database_spark.operators import registry  # noqa: F401
-    from dhs_to_database_spark.operators import (  # noqa: F401
-        bpe,
-        classifier,
-        clustering,
-        dedup,
-        layout,
-        metadata,
-        multimodal,
-        ranking,
-        relational,
-        sampling,
-        similarity,
-        text_analysis,
-        windows,
-    )
-    from dhs_to_database_spark.streaming import events, stateful  # noqa: F401
+    for module in _QUERY_MODULES:
+        importlib.import_module(module)
+    from dhs_to_database_spark.operators import registry
 
     return registry
 
@@ -152,14 +164,20 @@ _GRADE_TAIL = [
 ]
 
 
+def _source_order(fn: Callable) -> tuple[int, int]:
+    return _QUERY_MODULES.index(fn.__module__), fn.__code__.co_firstlineno
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
     Ordered so oracle-backed queries occupy the driver's 50-entry grading
-    window; see _GRADE_TAIL above for the documented overflow policy.
+    window; see _GRADE_TAIL above for the documented overflow policy. The
+    other two tiers keep source order: ``_QUERY_MODULES``, then line.
     """
     reg = _registry()
-    qs, ors = reg.QUERIES, reg.ORACLES
+    ors = reg.ORACLES
+    qs = dict(sorted(reg.QUERIES.items(), key=lambda kv: _source_order(kv[1])))
     tail = set(_GRADE_TAIL)
     names = (
         [n for n in qs if n in ors and n not in tail]

@@ -213,7 +213,6 @@ def demux_to_parquet(
     spec: DatSpec,
     out_dir: str,
     mode: str = "overwrite",
-    pack_wide: bool = True,
     sink_format: str = "parquet",
 ) -> dict[str, str]:
     """Demux + write one parquet dataset per record type, partitioned by
@@ -243,7 +242,7 @@ def demux_to_parquet(
     tagged = read_tagged_lines(spark, path, spec).cache()
     try:
         out = {}
-        packed = packed_record_names(spec) if pack_wide else set()
+        packed = packed_record_names(spec)
         for rec in spec.records.values():
             dest = f"{out_dir}/{rec.record_name}"
             project = project_packed if rec.record_name in packed else project_record

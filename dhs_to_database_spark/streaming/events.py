@@ -3,9 +3,9 @@
 The reference is purely batch (SURVEY.md §1.3); streaming is extension
 surface. Design: every streaming aggregation here has a batch twin in
 ``operators/windows.py`` registered with a DuckDB oracle — the streaming
-path is validated in tests by checking that an ``availableNow`` run over the
-same files produces the batch twin's result (the classic
-batch-stream-equivalence harness).
+path is validated in tests by checking that an ``availableNow`` drain
+(``drain_to_parquet``) over the same files produces the batch twin's result
+(the classic batch-stream-equivalence harness).
 
 Scale notes: watermarks bound state; tumbling/sliding aggs shuffle once on
 (window, key); ``dropDuplicatesWithinWatermark`` keeps the dedup state
@@ -15,13 +15,14 @@ windowed instead of unbounded; session windows use Spark's native
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.registry import query
 
-#: State-store partition count of the one-shot tempdir drains (see
+#: State-store partition count of the one-shot drains (see
 #: ``drain_to_parquet``).
 STREAM_SHUFFLE_PARTITIONS = 8
 
@@ -35,8 +36,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: 
     read and normalize ``ts`` to the session-UTC microsecond TimestampType,
     which event-time watermarks require.
     """
-    import os
-
     from pyspark.sql.types import LongType, TimestampNTZType
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -114,110 +113,68 @@ def deduped_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
-def run_to_memory(df: DataFrame, name: str, output_mode: str = "append") -> None:
-    """Drain the stream with availableNow into an in-memory table ``name``
-    (test/inspection harness)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def drain_to_parquet(
-    df: DataFrame,
-    output_mode: str = "append",
-    dest: str | None = None,
-    checkpoint: str | None = None,
-) -> DataFrame:
-    """availableNow + foreachBatch harness: drain the stream into a final
-    parquet table and return a batch DataFrame over it — the
-    oracle-checkable surface for streaming queries (r3 judge ask #3).
+def drain_to_parquet(df: DataFrame, output_mode: str = "append") -> DataFrame:
+    """availableNow + foreachBatch drain into parquet, returned as a batch
+    DataFrame — the engine's one drain and the oracle-checkable surface
+    for streaming queries.
 
     ``append`` mode accumulates each micro-batch's emitted rows (stateful
     append sinks: sessionizers, watermark dedup). ``complete`` mode
     overwrites with the full re-computed result each batch, so the FINAL
     table equals the batch-semantics answer exactly — the natural landing
     mode for streaming aggregations that an ANSI oracle can reproduce
-    verbatim. foreachBatch + parquet rather than the memory sink: the
-    memory sink collects to the driver (test-only); a parquet landing
-    scales to any result size and is what production would do.
+    verbatim.
 
-    ``dest``/``checkpoint``: landing and checkpoint paths. On a CLUSTER
-    these MUST be supplied and point at shared storage (HDFS/S3/...) —
-    foreachBatch's ``batch_df.write`` runs on the executors, so the
-    driver-local tempdir default only works in local mode, where this
-    harness is used for oracle verification. A caller-supplied ``dest``
-    is kept (and its checkpoint preserved for restartability); the
-    tempdir default is reclaimed at interpreter exit.
+    The drain owns its scratch: landing and checkpoint share one temporary
+    directory, deleted before this returns or raises. The returned frame
+    is a local checkpoint of the landing, so its rows outlive the
+    directory and are released with the frame. The scratch is
+    driver-local and its one-shot checkpoint is not restartable: a
+    cluster, whose executors write the micro-batches, or a restartable
+    stream needs caller-owned shared storage, i.e. ``stream_to_partitioned``.
     """
-    import atexit
-    import shutil
     import tempfile
 
-    caller_owns = dest is not None
-    if dest is None:
-        dest = tempfile.mkdtemp(prefix="stream_drain_")
-    ckpt = checkpoint or tempfile.mkdtemp(prefix="stream_drain_ckpt_")
-    mode = "overwrite" if output_mode == "complete" else "append"
-
-    def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode(mode).parquet(dest)
-
-    # r14 (guide §2.2): a stateful streaming query pins its state-store
-    # partition count to spark.sql.shuffle.partitions at FIRST start, and
-    # every micro-batch then pays per-partition state-store overhead
-    # (provider init, delta-file commit, maintenance) regardless of data
-    # volume — measured 3x wall on the two drain queries at the session's
-    # core-count-sized setting vs a small fixed count. The tempdir path
-    # is by construction the bounded local verification harness (see
-    # docstring), so its state partitioning should track the harness's
-    # bounded corpus, not the session's core count; a PRODUCTION drain
-    # passes dest/checkpoint (possibly resuming an existing checkpoint,
-    # whose pinned partitioning must not be fought) and the session conf
-    # is left untouched there. Emitted rows are state-partitioning-
-    # independent (hash distribution of keys only; config-invariance
-    # gate holds at 8 vs 32 vs 200). The count is STREAM_SHUFFLE_PARTITIONS.
     spark = df.sparkSession
-    tune_state = not caller_owns and checkpoint is None
-    if tune_state:
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    mode = "overwrite" if output_mode == "complete" else "append"
+    with tempfile.TemporaryDirectory(prefix="stream_drain_") as scratch:
+        dest = os.path.join(scratch, "landing")
+
+        def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
+            batch_df.write.mode(mode).parquet(dest)
+
+        # A stateful streaming query pins its state-store partition count
+        # to spark.sql.shuffle.partitions at FIRST start, and every
+        # micro-batch then pays per-partition state-store overhead
+        # (provider init, delta-file commit, maintenance) regardless of
+        # data volume — measured 3x wall on the two drain queries at the
+        # session's core-count-sized setting vs a small fixed count. The
+        # checkpoint is fresh on every call, so no earlier count is pinned.
+        # Emitted rows are state-partitioning-independent (hash
+        # distribution of keys only; config-invariance gate holds at 8 vs
+        # 32 vs 200). A session that never set the key gets it unset
+        # again, so the drain leaves the conf as it found it.
+        prev_parts = dict(spark.conf.getAll).get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        q = (
-            df.writeStream.foreachBatch(write_batch)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if tune_state:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    # The one-shot tempdir checkpoint is pure waste once the drain
-    # terminated (every call makes a fresh one, so it can never be
-    # restarted from); a CALLER-supplied checkpoint IS restartable and is
-    # preserved. The tempdir landing must outlive this call — the returned
-    # DataFrame reads it lazily — so it is reclaimed at interpreter exit
-    # instead of leaking across bench/test runs; a caller-supplied dest is
-    # theirs to manage.
-    if checkpoint is None:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    if not caller_owns:
-        atexit.register(shutil.rmtree, dest, ignore_errors=True)
-    try:
-        return spark.read.schema(df.schema).parquet(dest)
-    except AnalysisException as e:
-        # Every write creates dest, so a missing caller-supplied dest means
-        # no micro-batch ever wrote (empty stream); any other read error
-        # is a real failure and must not come back as an empty result.
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-        return spark.createDataFrame([], df.schema)
+        try:
+            q = (
+                df.writeStream.foreachBatch(write_batch)
+                .outputMode(output_mode)
+                .option("checkpointLocation", os.path.join(scratch, "checkpoint"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        finally:
+            if prev_parts is None:
+                spark.conf.unset("spark.sql.shuffle.partitions")
+            else:
+                spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        # Every write creates dest, so no dest means no micro-batch wrote
+        # (empty stream); any read error past this point propagates.
+        if not os.path.isdir(dest):
+            return spark.createDataFrame([], df.schema)
+        return spark.read.schema(df.schema).parquet(dest).localCheckpoint(eager=True)
 
 
 # Streaming aggregation with an ANSI oracle (r4): in COMPLETE output mode

@@ -475,3 +475,29 @@ def test_minhash_artifact_follows_corpus_rewrite(spark, tmp_path):
     write([(i, planted if i == 1 else t) for i, t in base])
     assert pairs() == {(0, 1)}
     assert not os.path.exists(stale)
+
+
+def test_minhash_artifact_is_deleted_at_process_exit(tmp_path):
+    """The session-scoped signature artifact does not outlive its process:
+    a process that built one leaves no ``dedup_`` entry in its temp dir."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import SF_DIR
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from dhs_to_database_spark.session import get_spark\n"
+        "from dhs_to_database_spark.operators import dedup\n"
+        "spark = get_spark('artifact_exit')\n"
+        f"dedup.minhash_near_dup(spark, {SF_DIR!r}).count()\n"
+        "print(*(path for _snap, path in dedup._ARTIFACTS.values()))\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_CPUS="2")
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, env=env, capture_output=True, text=True, check=True
+    ).stdout
+    built = out.splitlines()[-1].split()
+    assert built and all(p.startswith(str(tmp_path)) for p in built), out
+    assert [e for e in os.listdir(tmp_path) if e.startswith("dedup_")] == []

@@ -194,6 +194,16 @@ def test_layout_probe_allowlist_contract():
     assert "approx_percentile_orders" not in e.oracle_sql()
 
 
+def test_conf_change_allowlist_contract():
+    """config_probe's session-hygiene allowlist holds exactly the one
+    session conf key a query may leave changed, with its reason: every
+    other changed key fails the probe."""
+    import config_probe
+
+    assert set(config_probe.CONF_CHANGE_OK) == {"spark.sql.legacy.parquet.nanosAsLong"}
+    assert all(len(reason) >= 20 for reason in config_probe.CONF_CHANGE_OK.values())
+
+
 def test_key_cell_recurses_into_arrays_and_maps():
     """r14 (found by config_probe): array cells must compare by element
     bits, not by repr — np.ndarray vs list of identical floats tagged

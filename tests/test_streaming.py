@@ -2,13 +2,15 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from dhs_to_database_spark.streaming.events import (
     deduped_stream,
+    drain_to_parquet,
     read_events_stream,
-    run_to_memory,
     session_counts,
     sliding_counts,
     tumbling_counts,
@@ -28,11 +30,8 @@ def _batch_events(spark):
 
 
 def test_tumbling_stream_matches_batch(spark, events_stream):
-    run_to_memory(tumbling_counts(events_stream), "t_tumble", output_mode="complete")
-    got = {
-        (r["window_start"], r["event_type"]): r["n_events"]
-        for r in spark.table("t_tumble").collect()
-    }
+    rows = drain_to_parquet(tumbling_counts(events_stream), "complete").collect()
+    got = {(r["window_start"], r["event_type"]): r["n_events"] for r in rows}
     want = {
         (r["w"]["start"], r["event_type"]): r["n"]
         for r in _batch_events(spark)
@@ -44,8 +43,8 @@ def test_tumbling_stream_matches_batch(spark, events_stream):
 
 
 def test_sliding_stream_matches_batch(spark, events_stream):
-    run_to_memory(sliding_counts(events_stream), "t_slide", output_mode="complete")
-    got = {r["window_start"]: r["n_events"] for r in spark.table("t_slide").collect()}
+    rows = drain_to_parquet(sliding_counts(events_stream), "complete").collect()
+    got = {r["window_start"]: r["n_events"] for r in rows}
     want = {
         r["w"]["start"]: r["n"]
         for r in _batch_events(spark)
@@ -59,11 +58,8 @@ def test_sliding_stream_matches_batch(spark, events_stream):
 def test_session_stream_matches_batch_islands(spark, events_stream):
     """session_window stream vs the gaps-and-islands batch formulation:
     same number of sessions and same per-session event counts per user."""
-    run_to_memory(session_counts(events_stream), "t_sess", output_mode="complete")
-    got = sorted(
-        (r["user_id"], r["session_start"], r["n_events"])
-        for r in spark.table("t_sess").collect()
-    )
+    rows = drain_to_parquet(session_counts(events_stream), "complete").collect()
+    got = sorted((r["user_id"], r["session_start"], r["n_events"]) for r in rows)
     from dhs_to_database_spark.operators.windows import session_windows
 
     want = sorted(
@@ -74,8 +70,7 @@ def test_session_stream_matches_batch_islands(spark, events_stream):
 
 
 def test_dedup_within_watermark(spark, events_stream):
-    run_to_memory(deduped_stream(events_stream), "t_dedup")
-    n = spark.table("t_dedup").count()
+    n = len(drain_to_parquet(deduped_stream(events_stream)).collect())
     assert n == _batch_events(spark).select("event_id").distinct().count()
 
 
@@ -89,11 +84,10 @@ def test_stateful_sessionizer_matches_batch_islands(spark, events_stream):
 
     from dhs_to_database_spark.streaming.stateful import GAP_US, session_paths
 
-    run_to_memory(session_paths(events_stream), "t_paths")
     emitted = {
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"],
          round(r["total_value"], 6), r["first_type"], r["last_type"])
-        for r in spark.table("t_paths").collect()
+        for r in drain_to_parquet(session_paths(events_stream)).collect()
     }
 
     e = _batch_events(spark).withColumn("us", F.unix_micros("ts"))
@@ -193,10 +187,8 @@ def test_stream_to_partitioned_multi_batch(spark, tmp_path):
 def test_stream_stream_interval_join_matches_batch(spark, events_stream):
     from dhs_to_database_spark.streaming.events import clicks_before_purchase
 
-    run_to_memory(clicks_before_purchase(events_stream), "t_ssj")
-    got = {
-        (r["event_id"], r["click_id"]) for r in spark.table("t_ssj").collect()
-    }
+    rows = drain_to_parquet(clicks_before_purchase(events_stream)).collect()
+    got = {(r["event_id"], r["click_id"]) for r in rows}
     e = _batch_events(spark)
     c = e.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"),
@@ -224,13 +216,8 @@ def test_enriched_segment_stream_matches_batch(spark, events_stream):
     from dhs_to_database_spark.streaming.events import enriched_segment_counts
 
     cust = load_table(spark, SF_DIR, "customer")
-    run_to_memory(
-        enriched_segment_counts(events_stream, cust), "t_seg", output_mode="complete"
-    )
-    got = {
-        (r["window_start"], r["segment"]): r["n_events"]
-        for r in spark.table("t_seg").collect()
-    }
+    rows = drain_to_parquet(enriched_segment_counts(events_stream, cust), "complete").collect()
+    got = {(r["window_start"], r["segment"]): r["n_events"] for r in rows}
     want = {
         (r["window_start"], r["segment"]): r["n_events"]
         for r in segment_window_counts(spark, SF_DIR)
@@ -244,10 +231,7 @@ def test_late_data_dropped_after_watermark(spark, tmp_path):
     """An event older than the watermark arriving in a later micro-batch
     must NOT reopen its (already finalized) window: append-mode output for
     that window keeps the on-time count only."""
-    import os
     import time as _time
-
-    from dhs_to_database_spark.streaming.events import run_to_memory, tumbling_counts
 
     src = tmp_path / "late_src"
     src.mkdir()
@@ -289,10 +273,8 @@ def test_late_data_dropped_after_watermark(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .load(str(src))
     )
-    run_to_memory(tumbling_counts(stream), "t_late", output_mode="append")
-    got = {
-        r["window_start"].hour: r["n_events"] for r in spark.table("t_late").collect()
-    }
+    rows = drain_to_parquet(tumbling_counts(stream), "append").collect()
+    got = {r["window_start"].hour: r["n_events"] for r in rows}
     # the 10:00 window finalized with its 2 on-time events; id 5 was dropped
     assert got.get(10) == 2
 
@@ -401,13 +383,8 @@ def test_windowed_unique_users_stream_within_hll_bounds(spark, events_stream):
     from dhs_to_database_spark.operators.windows import window_unique_users
     from dhs_to_database_spark.streaming.events import windowed_unique_users
 
-    run_to_memory(
-        windowed_unique_users(events_stream), "t_uu", output_mode="complete"
-    )
-    got = {
-        r["window_start"]: (r["n_users_est"], r["n_events"])
-        for r in spark.table("t_uu").collect()
-    }
+    rows = drain_to_parquet(windowed_unique_users(events_stream), "complete").collect()
+    got = {r["window_start"]: (r["n_users_est"], r["n_events"]) for r in rows}
     want = {
         r["window_start"]: (r["n_users"], r["n_events"])
         for r in window_unique_users(spark, SF_DIR).collect()
@@ -428,8 +405,7 @@ def test_stream_stream_outer_interval_join_emits_unmatched(spark, events_stream)
 
     from dhs_to_database_spark.streaming.events import clicks_before_purchase_outer
 
-    run_to_memory(clicks_before_purchase_outer(events_stream), "t_ssjo")
-    rows = spark.table("t_ssjo").collect()
+    rows = drain_to_parquet(clicks_before_purchase_outer(events_stream)).collect()
     inner_got = {(r["event_id"], r["click_id"]) for r in rows if r["click_id"] is not None}
     null_got = [r["event_id"] for r in rows if r["click_id"] is None]
     assert len(null_got) == len(set(null_got))  # exactly-once null emission
@@ -492,45 +468,22 @@ def test_drain_complete_equals_batch_tumbling(spark):
     assert streamed == batch
 
 
-def test_drain_caller_supplied_landing(spark, tmp_path, events_stream):
-    """r5: a caller-supplied dest/checkpoint (the cluster path — shared
-    storage) is written, read back, and PRESERVED (not reclaimed at exit),
-    with the checkpoint left restartable."""
-    import os
-
-    from dhs_to_database_spark.streaming.events import drain_to_parquet
-    from dhs_to_database_spark.streaming.stateful import session_paths
-
-    dest = str(tmp_path / "land")
-    ckpt = str(tmp_path / "ckpt")
-    landed = drain_to_parquet(
-        session_paths(events_stream), "append", dest=dest, checkpoint=ckpt
-    )
-    n = landed.count()
-    assert n > 0
-    assert any(f.endswith(".parquet") for f in os.listdir(dest))
-    assert os.path.isdir(os.path.join(ckpt, "offsets"))  # restartable
-
-
 def test_drain_only_nothing_landed_reads_empty(spark, tmp_path, monkeypatch):
     """A drain in which no micro-batch ever wrote returns an empty frame
-    (with the stream's schema), for a caller-supplied dest that was never
-    created and for the tempdir default alike. Any OTHER error from the
-    final read must propagate instead of coming back as an empty result
+    with the stream's schema. Any error from the final read of a landing
+    that exists must propagate instead of coming back as an empty result
     (it used to be swallowed by a blanket except)."""
     from pyspark.sql.readwriter import DataFrameReader
-
-    from dhs_to_database_spark.streaming.events import drain_to_parquet
 
     src = tmp_path / "src"
     src.mkdir()
     stream = spark.readStream.schema("k int, v string").parquet(str(src))
 
-    landed = drain_to_parquet(
-        stream, dest=str(tmp_path / "land"), checkpoint=str(tmp_path / "ckpt")
-    )
+    landed = drain_to_parquet(stream)
     assert landed.schema == stream.schema and landed.count() == 0
-    assert drain_to_parquet(stream).count() == 0
+
+    spark.createDataFrame([(1, "a")], stream.schema).write.parquet(str(src / "b0"), mode="append")
+    stream = spark.readStream.schema(stream.schema).parquet(str(src / "b0"))
 
     def unreadable(self, *paths, **options):
         raise RuntimeError("landing storage unreadable")
@@ -540,19 +493,68 @@ def test_drain_only_nothing_landed_reads_empty(spark, tmp_path, monkeypatch):
         drain_to_parquet(stream)
 
 
+def _drain_scratch(root) -> list[str]:
+    return [e for e in os.listdir(root) if e.startswith("stream_drain_")]
+
+
+def test_drain_result_outlives_its_scratch(spark, tmp_path, monkeypatch):
+    """The drain deletes its landing and checkpoint before it returns; the
+    returned frame still holds every landed row."""
+    import tempfile
+
+    src, scratch = tmp_path / "src", tmp_path / "scratch"
+    scratch.mkdir()
+    spark.range(25).selectExpr("CAST(id AS INT) AS k").write.parquet(str(src))
+    stream = spark.readStream.schema("k int").parquet(str(src))
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+
+    landed = drain_to_parquet(stream)
+    assert _drain_scratch(scratch) == []
+    assert landed.count() == 25
+    assert sorted(r["k"] for r in landed.collect()) == list(range(25))
+
+
+def test_failing_drain_raises_and_leaves_no_scratch(spark, tmp_path, monkeypatch):
+    """A micro-batch that fails surfaces as an error, not as an empty or
+    partial result, and neither the landing nor the checkpoint survives;
+    the session's shuffle-partition setting is restored."""
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    src, scratch = tmp_path / "src", tmp_path / "scratch"
+    scratch.mkdir()
+    spark.range(5).selectExpr("CAST(id AS INT) AS k").write.parquet(str(src))
+    stream = spark.readStream.schema("k int").parquet(str(src)).withColumn(
+        "k", F.when(F.col("k") >= 0, F.raise_error(F.lit("drain boom"))).otherwise(F.col("k"))
+    )
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+
+    with pytest.raises(StreamingQueryException, match="drain boom"):
+        drain_to_parquet(stream)
+    assert _drain_scratch(scratch) == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+
+
 def test_drain_append_matches_memory_sink(spark, events_stream):
-    """The parquet foreachBatch drain emits the same closed sessions as the
+    """The parquet foreachBatch drain emits the same closed sessions as a
     memory-sink drain (same availableNow semantics, different landing)."""
-    from dhs_to_database_spark.streaming.events import drain_to_parquet
     from dhs_to_database_spark.streaming.stateful import session_paths
-    from dhs_to_database_spark.streaming.events import run_to_memory
 
     landed = drain_to_parquet(session_paths(events_stream), "append")
-    run_to_memory(
-        session_paths(read_events_stream(spark, SF_DIR)), "drain_cmp_mem"
+    q = (
+        session_paths(read_events_stream(spark, SF_DIR))
+        .writeStream.format("memory")
+        .queryName("drain_cmp_mem")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    mem = spark.table("drain_cmp_mem")
+    q.awaitTermination()
+    try:
+        mem = spark.table("drain_cmp_mem").collect()
+    finally:
+        spark.catalog.dropTempView("drain_cmp_mem")
     key = lambda r: (r["user_id"], r["session_start"], r["session_end"])  # noqa: E731
-    assert sorted(key(r) for r in landed.collect()) == sorted(
-        key(r) for r in mem.collect()
-    )
+    assert sorted(key(r) for r in landed.collect()) == sorted(key(r) for r in mem)

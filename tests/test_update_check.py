@@ -156,21 +156,33 @@ _GRADING_WINDOW = [
 ]
 
 
-def test_grading_window_is_pinned():
-    """Read in a fresh interpreter, as the driver does: the registry keeps
-    import order, so a test process that imported an operator module first
-    sees the same window in another order."""
+def _window_in_fresh_interpreter(preamble: str = "") -> list[str]:
     import json
     import os
     import subprocess
     import sys
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    code = "import json, __spark_entry__ as e; print(json.dumps(list(e.queries())[:50]))"
+    code = preamble + "import json, __spark_entry__ as e; print(json.dumps(list(e.queries())[:50]))"
     out = subprocess.run(
         [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
     ).stdout
-    assert json.loads(out.splitlines()[-1]) == _GRADING_WINDOW
+    return json.loads(out.splitlines()[-1])
+
+
+def test_grading_window_is_pinned():
+    """Read in a fresh interpreter, as the driver does."""
+    assert _window_in_fresh_interpreter() == _GRADING_WINDOW
+
+
+def test_grading_window_ignores_import_order():
+    """A process that imported operator modules before the driver contract
+    sees the same window in the same order."""
+    preamble = (
+        "import dhs_to_database_spark.operators.text_analysis, "
+        "dhs_to_database_spark.streaming.stateful; "
+    )
+    assert _window_in_fresh_interpreter(preamble) == _GRADING_WINDOW
 
 
 def test_no_bare_whitespace_class_in_oracle_gated_patterns():

@@ -43,7 +43,7 @@ NOTES = {
     "top_unshipped_orders": "no broadcast hints — customer scales with SF, AQE picks broadcast-vs-SMJ per join from runtime sizes; TakeOrderedAndProject, no global sort",
     "gap_fill_hourly": "agg shuffle + LOCF window shuffle, both on user_id; AQE broadcasts the grid join at this SF (co-partitioned at scale)",
     "segment_window_counts": "user dim join left to AQE (dim scales with SF — no hardcoded broadcast); one shuffle for the window agg",
-    "decile_stats": "range-partition + pure-JVM pid/local-idx tag (monotonically_increasing_id decomposition — no Python workers) + broadcast offset join — NO single-partition window; materialization tiered memory/disk (temp-parquet tier survives executor loss, pins nothing)",
+    "decile_stats": "range-partition + pure-JVM pid/local-idx tag (monotonically_increasing_id decomposition — no Python workers) + per-partition offsets as a literal map lookup (no join) — NO single-partition window; the tagged input is one eager localCheckpoint, released by RankInputHandle",
     "funnel_stages": "three conditional-min windows share one user_id exchange",
     "sequence_pack": "one shard shuffle + window cumsum; shards pack independently",
     "curation_pipeline": "quality filter fused into the scan; dedup digest shuffle is the only wide stage before the tiny summary agg",
