@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .registry import query
-from .tokens import tokenize_words
+from .tokens import explode_terms, tokenize_words
 from .util import local_rows_df
 
 _EOW = "</w>"
@@ -58,11 +58,8 @@ class BpeTraining(NamedTuple):
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(w, n) corpus word-frequency table — the ONLY corpus-scale pass."""
     return (
-        docs.select(
-            F.explode(tokenize_words(text_col)).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .groupBy("w")
+        explode_terms(docs, [], tokenize_words(text_col))
+        .groupBy(F.col("term").alias("w"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
 

@@ -34,7 +34,7 @@ import tempfile
 
 from ..sources.tables import load_table
 from .registry import query
-from .tokens import explode_ngrams, normalized_fingerprint, tokenize_words, ws_tokens
+from .tokens import explode_ngrams, explode_terms, normalized_fingerprint, tokenize_words, ws_tokens
 from .util import local_rows_df, spread_narrow_cpu
 
 # ---------------------------------------------------------------------------
@@ -321,8 +321,8 @@ _BAND_BITS = 64 // N_SIMHASH_BANDS
 
 def simhash_bands(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Per doc: eight 8-bit SimHash band values (p0..p7)."""
-    words = docs.select(id_col, F.explode(tokenize_words("text")).alias("w"))
-    h = F.xxhash64("w")
+    words = explode_terms(docs, id_col, tokenize_words("text"))
+    h = F.xxhash64("term")
     votes = [
         F.sum(
             F.when(F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -1744,14 +1744,9 @@ def simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed-BIGINT fingerprint — the oracle-verified twin of
     ``simhash_near_dup`` (see block comment for the r4 redesign)."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    hashes = (
-        spread_narrow_cpu(d)
-        .select("doc_id", F.explode(tokenize_words("text")).alias("w"))
-        .filter(F.col("w") != "")
-        .select(
-            "doc_id",
-            F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("bigint").alias("h"),
-        )
+    hashes = explode_terms(d, "doc_id", tokenize_words("text"), spread=True).select(
+        "doc_id",
+        F.conv(F.substring(F.md5("term"), 1, 15), 16, 10).cast("bigint").alias("h"),
     )
     # ONE map-side-combined shuffle: 60 ones-counts + the word count per
     # doc; sign rule 2*ones_b >= n == vote sum >= 0. The packed

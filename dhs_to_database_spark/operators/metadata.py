@@ -103,7 +103,7 @@ def schema_union_derive(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (03 nb raw :993-1140). Content key = md5 of the document text.
 #
 # The synthetic corpus has exact-duplicate text groups only at sf0.1
-# (TESTDATA corpus fact; degeneracy audit CHECK_LOCAL_r10), so the bare
+# (TESTDATA corpus fact, found by the round-10 degeneracy audit), so the bare
 # detector degenerates to an empty 0=0 hash match at the driver's grading
 # SF (VERDICT r10 nit #1). Like ``pii_redact``, the judge-facing query
 # therefore PLANTS deterministic duplicate loads first: every row with

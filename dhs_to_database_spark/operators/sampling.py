@@ -26,6 +26,7 @@ from ..sources.tables import load_table
 from .registry import query
 from .tokens import (
     explode_ngrams,
+    explode_terms,
     n_tokens,
     normalized_fingerprint,
     passes_quality,
@@ -664,16 +665,12 @@ def importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same select as the explode re-evaluates it per OUTPUT row (per
     # token, each re-splitting the full text: measured 2.6s -> 0.5s at
     # sf0.1 for this stage).
-    toks = (
-        spread_narrow_cpu(d.select("doc_id", "text"))
-        .select(
-            "doc_id",
-            passes_quality(F.col("text")).alias("is_target"),
-            tokenize_words("text").alias("t"),
-        )
-        .select("doc_id", "is_target", F.explode("t").alias("term"))
-        .filter(F.col("term") != "")
+    gated = spread_narrow_cpu(d.select("doc_id", "text")).select(
+        "doc_id",
+        passes_quality(F.col("text")).alias("is_target"),
+        tokenize_words("text").alias("t"),
     )
+    toks = explode_terms(gated, ["doc_id", "is_target"], F.col("t"))
     # ONE corpus-wide shuffle builds both LMs (raw + target counts per
     # term, map-side combined); totals and vocab size then aggregate the
     # vocab-sized table, not the corpus — 2 corpus passes total (this one
@@ -832,16 +829,12 @@ def term_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the explode — once per document, not once per token (same fix as
     # importance_weights: co-locating a computed column with a generator
     # re-evaluates it per output row).
-    toks = (
-        spread_narrow_cpu(d.select("doc_id", "lang", "text"))
-        .select(
-            "lang",
-            (split_assignment(F.col("doc_id"), 0.8) == "train").alias("is_train"),
-            tokenize_words("text").alias("t"),
-        )
-        .select("lang", "is_train", F.explode("t").alias("term"))
-        .filter(F.col("term") != "")
+    labeled = spread_narrow_cpu(d.select("doc_id", "lang", "text")).select(
+        "lang",
+        (split_assignment(F.col("doc_id"), 0.8) == "train").alias("is_train"),
+        tokenize_words("text").alias("t"),
     )
+    toks = explode_terms(labeled, ["lang", "is_train"], F.col("t"))
     counts = toks.groupBy("lang", "term").agg(
         F.sum((~F.col("is_train")).cast("long")).cast("bigint").alias("c_b"),
         F.sum(F.col("is_train").cast("long")).cast("bigint").alias("c_r"),

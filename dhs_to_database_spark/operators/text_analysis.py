@@ -17,8 +17,10 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .registry import query
+from .bpe import word_counts
 from .tokens import (
     WS_CHARS,
+    explode_terms,
     n_tokens,
     ngrams,
     normalized_fingerprint,
@@ -273,13 +275,9 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    toks = spread_narrow_cpu(d.select("doc_id", "text")).select(
-        "doc_id",
-        F.explode(tokenize_words("text")).alias("term"),
-    ).filter(F.col("term") != "")
     return (
-        toks.groupBy("term")
+        _doc_terms(spark, sf_dir)
+        .groupBy("term")
         .agg(
             F.count(F.lit(1)).alias("term_freq"),
             F.count_distinct("doc_id").alias("doc_freq"),
@@ -721,11 +719,7 @@ def cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def token_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    toks = spread_narrow_cpu(d.select("doc_id", "text")).select(
-        "doc_id",
-        F.explode(tokenize_words("text")).alias("term"),
-    ).filter(F.col("term") != "")
+    toks = _doc_terms(spark, sf_dir)
     vocab = toks.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     tot = vocab.agg(F.sum("cnt").cast("bigint").alias("total_tokens"))
     scored = (
@@ -910,11 +904,7 @@ def _doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # spread the single-row-group scan before the tokenize/explode kernel
     # (r14, guide §2.5; size-gated no-op at corpus scale)
-    return (
-        spread_narrow_cpu(d.select("doc_id", "text"))
-        .select("doc_id", F.explode(tokenize_words("text")).alias("term"))
-        .filter(F.col("term") != "")
-    )
+    return explode_terms(d.select("doc_id", "text"), "doc_id", tokenize_words("text"), spread=True)
 
 
 _TOKS_CTE = """
@@ -1097,15 +1087,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    toks = (
-        spread_narrow_cpu(d.select("doc_id", "text"))
-        .select(
-            "doc_id",
-            F.explode(tokenize_words("text")).alias("term"),
-        )
-        .filter(F.col("term") != "")
-    )
+    toks = _doc_terms(spark, sf_dir)
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     dl = tf.groupBy("doc_id").agg(F.sum("c").cast("bigint").alias("n"))
     p = F.col("c").cast("double") / F.col("n")
@@ -1194,9 +1176,8 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and then re-materialized into block storage.
     bigrams = bigrams.localCheckpoint(eager=True)
     uni = (
-        toks.select(F.explode("t").alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
+        explode_terms(toks, [], F.col("t"))
+        .groupBy(F.col("term").alias("w"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
     pair_counts = bigrams.groupBy("w1", "w2").agg(
@@ -1530,9 +1511,8 @@ def doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and then re-materialized into block storage.
     dbg = dbg.localCheckpoint(eager=True)
     uni = (
-        toks.select(F.explode("t").alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
+        explode_terms(toks, [], F.col("t"))
+        .groupBy(F.col("term").alias("w"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("c1"))
     )
     tot = uni.agg(
@@ -1619,15 +1599,7 @@ _BPE_TOPK = 30
 def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-weighted adjacent-symbol pair counts over the word
     vocabulary — the statistic BPE training maximizes at each merge."""
-    d = load_table(spark, sf_dir, "documents")
-    wc = (
-        d.select(
-            F.explode(tokenize_words("text")).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
+    wc = word_counts(load_table(spark, sf_dir, "documents"))
     pairs = wc.select(
         "n",
         F.explode(

@@ -8,8 +8,10 @@ not ``\\s``: Java's ``\\s`` includes ``\\x0b`` while RE2/DuckDB's does not.
 ``trim`` strips ASCII spaces only. The DuckDB oracle SQL strings keep
 their own spelling on purpose — they are the independent side.
 
-All n-grams come from one kernel, ``ngrams``, over an ALREADY-PROJECTED
-token column; ``explode_ngrams`` does that projection itself.
+Two stream kernels turn a token array into rows. Terms come from
+``explode_terms``: one row per non-empty token. All n-grams come from
+``ngrams``, over an ALREADY-PROJECTED token column; ``explode_ngrams``
+does that projection itself.
 Interpreted higher-order-function lambdas re-evaluate inlined
 subexpressions per element, so a tokenizer inlined into the gram lambda
 re-splits the document once per gram (measured 2.5-6x on the gram
@@ -140,6 +142,25 @@ def explode_ngrams(
         arr = F.array_distinct(arr)
     out = F.posexplode(arr).alias("pos", "gram") if pos else F.explode(arr).alias("gram")
     return toks.select(*keep, out)
+
+
+def explode_terms(
+    df: DataFrame, keep: str | list[str], tokens: Column, spread: bool = False
+) -> DataFrame:
+    """(*keep, term) rows: one per non-empty token of ``tokens`` (a
+    tokenizer expression over ``df``, or a token column a caller projected
+    below the explode to evaluate other columns once per row). The '' of
+    an empty or edge-whitespace text is dropped, as in every oracle's
+    ``term <> ''``. ``keep`` and ``spread`` work as in ``explode_ngrams``.
+
+    Unlike the gram kernel this one explodes ``tokens`` in place: Generate
+    evaluates its argument once per input row, and a separate projection
+    would only add the optimizer's inferred ``size(..) > 0`` filter, which
+    re-runs the tokenizer."""
+    if spread:
+        df = spread_narrow_cpu(df)
+    keep = [keep] if isinstance(keep, str) else list(keep)
+    return df.select(*keep, F.explode(tokens).alias("term")).filter(F.col("term") != "")
 
 
 def word_pairs(col_name: str) -> Column:

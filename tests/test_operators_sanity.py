@@ -41,6 +41,20 @@ def test_simhash_flags_near_dups(spark):
     assert exact <= sh
 
 
+def test_simhash_bands_drop_empty_tokens_like_md5_twin(spark):
+    """simhash_bands votes over the same non-empty terms as its oracle
+    twin simhash_md5: edge whitespace (which leaves a '' token after
+    tokenize_words) does not move the bands, and an empty document has
+    no terms, so no band row."""
+    from dhs_to_database_spark.operators.dedup import simhash_bands
+
+    texts = ["foo bar baz qux", "\tfoo bar baz qux", "foo bar baz qux\n", ""]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
+    bands = {r["doc_id"]: tuple(r)[1:] for r in simhash_bands(docs).collect()}
+    assert sorted(bands) == [0, 1, 2]
+    assert bands[0] == bands[1] == bands[2]
+
+
 def test_bucket_pairs_caps_hot_buckets(spark):
     """An adversarial stop-phrase bucket (every doc collides) must be
     dropped — bounded candidate output, recorded drop metric — while normal

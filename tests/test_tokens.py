@@ -1,8 +1,9 @@
-"""The shared tokenizers and gram kernel (operators/tokens.py).
+"""The shared tokenizers and term/gram kernels (operators/tokens.py).
 
-Two gates: a source lint that keeps tokenization spelled in ONE module,
-and a property test that the two Spark tokenizers equal the DuckDB
-oracle spellings they are graded against.
+Two gates: a source lint that keeps tokenization and the term stream
+spelled in ONE module, and a property test that the two Spark tokenizers
+and the term kernel equal the DuckDB oracle spellings they are graded
+against.
 """
 
 from __future__ import annotations
@@ -38,10 +39,16 @@ def _call_name(node: ast.AST) -> str | None:
     return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
 
 
+def _calls(node: ast.AST, name: str) -> bool:
+    return any(_call_name(n) == name for n in ast.walk(node))
+
+
 def tokenizer_lint(root: str, kernel: str) -> list[str]:
-    """Spark-side spellings of the tokenizer outside ``kernel``: the
-    whitespace class in a (non-docstring, non-SQL) string, a
-    ``lower(trim(..))`` chain, and ``split(trim(..), <name>)``."""
+    """Spark-side spellings of the tokenizer or the term stream outside
+    ``kernel``: the whitespace class in a (non-docstring, non-SQL) string,
+    a ``lower(trim(..))`` chain, ``split(trim(..), <name>)``, an
+    ``explode`` of ``tokenize_words(..)`` and an ``<expr> != ""`` term
+    filter (both belong to ``explode_terms``)."""
     offenders = []
     for dirpath, _, files in os.walk(root):
         for fn in sorted(files):
@@ -67,7 +74,15 @@ def tokenizer_lint(root: str, kernel: str) -> list[str]:
                     and ("\\x0b" in node.value or "\x0b" in node.value)
                 ):
                     offenders.append(f"{where}:{node.lineno}: whitespace class literal")
+                if isinstance(node, ast.Compare) and any(
+                    isinstance(op, ast.NotEq) for op in node.ops
+                ):
+                    sides = [node.left, *node.comparators]
+                    if any(isinstance(s, ast.Constant) and s.value == "" for s in sides):
+                        offenders.append(f"{where}:{node.lineno}: != '' term filter")
                 name = _call_name(node)
+                if name == "explode" and node.args and _calls(node.args[0], "tokenize_words"):
+                    offenders.append(f"{where}:{node.lineno}: explode(tokenize_words(...))")
                 if name not in ("lower", "split") or not node.args:
                     continue
                 if _call_name(node.args[0]) != "trim":
@@ -81,9 +96,10 @@ def tokenizer_lint(root: str, kernel: str) -> list[str]:
 
 def test_tokenizer_spelled_only_in_kernel_module():
     """Every Spark text operator tokenizes through operators/tokens.py:
-    no other module spells the whitespace class or a trim-based
-    tokenizer chain (the DuckDB oracle SQL strings are exempt — they are
-    the independent side of the comparison)."""
+    no other module spells the whitespace class, a trim-based tokenizer
+    chain, or its own term explode and '' filter (the DuckDB oracle SQL
+    strings are exempt — they are the independent side of the
+    comparison)."""
     offenders = tokenizer_lint(_PKG, _KERNEL)
     assert offenders == [], "\n".join(offenders)
 
@@ -93,23 +109,29 @@ def test_spark_tokenizers_match_duckdb_oracle_spellings(spark):
     ``string_split_regex(trim(x), '[ \\t\\n\\x0b\\f\\r]+')`` and
     ``tokenize_words`` equals
     ``string_split(regexp_replace(lower(trim(x)), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ')``
-    on generated text. The alphabet is tests/test_dedup.py's (quotes,
-    backslash, LIKE wildcards, é and 日) plus vertical tab — which the
-    explicit class splits on in both engines — and upper-case letters so
-    ``lower`` is exercised. No divergence is known on this alphabet.
+    on generated text, and ``explode_terms`` yields, per row, the
+    non-empty ``unnest`` of the latter — the oracles' ``term <> ''``
+    rule, which no corpus document reaches. The alphabet is
+    tests/test_dedup.py's (quotes, backslash, LIKE wildcards, é and 日)
+    plus vertical tab — which the explicit class splits on in both
+    engines — and upper-case letters so ``lower`` is exercised. No divergence is known on this alphabet.
     Examples are batched: one Spark job checks a whole generated list."""
     import duckdb
     from hypothesis import given, settings
     from hypothesis import strategies as st
     from pyspark.sql import functions as F
 
-    from dhs_to_database_spark.operators.tokens import tokenize_words, ws_tokens
+    from dhs_to_database_spark.operators.tokens import explode_terms, tokenize_words, ws_tokens
 
     con = duckdb.connect()
     raw_sql = "SELECT string_split_regex(trim(?), '[ \\t\\n\\x0b\\f\\r]+')"
     norm_sql = (
         "SELECT string_split(regexp_replace(lower(trim(?)),"
         " '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ')"
+    )
+    terms_sql = (
+        "SELECT term FROM (SELECT unnest(string_split(regexp_replace(lower(trim(?)),"
+        " '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ')) AS term) WHERE term <> ''"
     )
     alphabet = list("ab \t\n\f\r'\"\\%_") + ["é", "日", "\x0b", "A", "É"]
 
@@ -123,11 +145,16 @@ def test_spark_tokenizers_match_duckdb_oracle_spellings(spark):
                 "i", ws_tokens("x").alias("raw"), tokenize_words(F.col("x")).alias("norm")
             ).collect()
         }
+        terms = {i: [] for i in range(len(texts))}
+        for r in explode_terms(df, "i", tokenize_words("x")).collect():
+            terms[r["i"]].append(r["term"])
         for i, tx in enumerate(texts):
             want = (
                 con.execute(raw_sql, [tx]).fetchone()[0],
                 con.execute(norm_sql, [tx]).fetchone()[0],
             )
             assert got[i] == want, (tx, got[i], want)
+            want_terms = [r[0] for r in con.execute(terms_sql, [tx]).fetchall()]
+            assert terms[i] == want_terms, (tx, terms[i], want_terms)
 
     check()

@@ -308,3 +308,32 @@ def test_chain_and_readme_tools_exist():
         assert named, f"{doc} names no tools"
         missing += [f"{doc}: {t}" for t in sorted(named) if not os.path.exists(os.path.join(root, t))]
     assert missing == [], missing
+
+
+def test_tools_find_their_own_checkout():
+    """Every tool resolves the repo from its own ``__file__``: none spells
+    the checkout's absolute path, and none puts a string literal on
+    ``sys.path``. A hard-coded root makes a tool run from a second
+    checkout import, test and write the other tree."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(root, "tools", "*.py"))):
+        where = os.path.relpath(path, root)
+        with open(path) as fh:
+            src = fh.read()
+        if root in src:
+            offenders.append(f"{where}: names {root}")
+        for node in ast.walk(ast.parse(src)):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "insert"
+                and ast.unparse(node.func.value) == "sys.path"
+                and isinstance(node.args[-1], ast.Constant)
+            ):
+                offenders.append(f"{where}:{node.lineno}: sys.path literal")
+    assert offenders == [], "\n".join(offenders)

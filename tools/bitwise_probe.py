@@ -11,10 +11,12 @@ effects so tests/test_gate_signed_zero.py can pin their semantics; the
 probe itself runs under __main__.
 """
 import math
+import os
 import struct
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
 import numpy as np
 
 

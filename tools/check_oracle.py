@@ -15,10 +15,12 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
 
 import duckdb
 import pandas as pd

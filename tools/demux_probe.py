@@ -22,7 +22,7 @@ Claims measured and appended to SCALING.md:
   asserted.
 
 Generation is idempotent (skips existing tiers); corpus lives in
-/root/repo/.scale_dat (gitignored).
+<repo>/.scale_dat (gitignored).
 
 Usage: python tools/demux_probe.py
 """
@@ -34,11 +34,12 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
 
-ROOT = "/root/repo/.scale_dat"
+ROOT = os.path.join(_REPO_ROOT, ".scale_dat")
 
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(_REPO_ROOT, "tests"))
 from fixtures_cspro import DCF_TEXT  # noqa: E402  (the pytest fixture dict)
 
 # Balanced tiers: (name, total_lines, n_surveys). 4 lines per household
@@ -401,7 +402,7 @@ def main() -> None:
         *wide_rows,
         f"\n{wide_verdict}; probe asserts ratio > 0.65.",
     ]
-    with open("/root/repo/SCALING.md", "a") as f:
+    with open(os.path.join(_REPO_ROOT, "SCALING.md"), "a") as f:
         f.write("\n".join(lines) + "\n")
 
 

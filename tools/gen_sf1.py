@@ -31,10 +31,10 @@ corpus, so this derives one from sf0.1 deterministically:
   unchanged so window buckets get 10x the rows without growing state
   cardinality beyond the linear user growth.
 
-Output: /root/repo/.scale_sf1/{documents,embeddings,events}.parquet (gitignored).
+Output: <repo>/.scale_sf1/{documents,embeddings,events}.parquet (gitignored).
 Idempotent: skips work if outputs exist. Stdlib + duckdb only.
 
-``--sf10`` (r8): same derivation at 100 replicas -> /root/repo/.scale_sf10
+``--sf10`` (r8): same derivation at 100 replicas -> <repo>/.scale_sf10
 (10,000x sf0.001) for the decade probe. The per-replica word map stays
 injective/prefix-free at two-digit k because corpus words contain no
 digits ('r1' || w can never equal 'r11' || w2 — w2 would need a leading
@@ -49,7 +49,8 @@ import os
 import duckdb
 
 SRC = "/root/testdata/sf0.1"
-OUT = "/root/repo/.scale_sf1"
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+OUT = os.path.join(_REPO_ROOT, ".scale_sf1")
 REPLICAS = 10
 SHIFT = 10_000_000
 
@@ -123,6 +124,6 @@ if __name__ == "__main__":
     import sys
 
     if "--sf10" in sys.argv:
-        main(out="/root/repo/.scale_sf10", replicas=100)
+        main(out=os.path.join(_REPO_ROOT, ".scale_sf10"), replicas=100)
     else:
         main()

@@ -12,11 +12,13 @@ Usage: python tools/plan_audit.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
 
 NOTES = {
     "pricing_summary": "one shuffle (the agg); date filter pushed to parquet",
@@ -423,6 +425,6 @@ def audit(sf_dir: str) -> str:
 if __name__ == "__main__":
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     md = audit(sf_dir)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(_REPO_ROOT, "PLANS.md"), "w") as f:
         f.write(md)
     print(md)

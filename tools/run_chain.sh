@@ -6,7 +6,7 @@
 #
 # Order matters: scale_probe main() OVERWRITES SCALING.md; --sf1/--sf10 and
 # demux_probe APPEND. If any code lands after this chain, re-run the
-# affected steps so CHECK_LOCAL quotes frozen-HEAD numbers only.
+# affected steps so any recorded figure is a frozen-HEAD number.
 set -e
 cd "$(dirname "$0")/.."
 # ADVICE r11: a detached setsid/nohup launch from a non-interactive
@@ -57,4 +57,4 @@ echo "=== [13/13] bench ==="
 "$PY" bench.py
 echo "=== chain complete at $(git rev-parse HEAD) ==="
 echo "Now re-run pytest + the vanilla driver simulation at this HEAD"
-echo "(see .claude/skills/verify/SKILL.md) before writing CHECK_LOCAL."
+echo "before recording any figure from this chain."

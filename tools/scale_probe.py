@@ -14,10 +14,15 @@ Usage: python tools/scale_probe.py          # full table, sf0.001-0.1
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
+
+_GEN_SF1 = os.path.join(_REPO_ROOT, "tools", "gen_sf1.py")
+_SCALING_MD = os.path.join(_REPO_ROOT, "SCALING.md")
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -146,7 +151,7 @@ PROBES = {
 # each round). Probed to sf1 (10x sf0.1, synthesized by tools/gen_sf1.py —
 # documents + embeddings + events) to prove linear throughput holds over
 # 1000x of data.
-SF1_DIR = "/root/repo/.scale_sf1"
+SF1_DIR = os.path.join(_REPO_ROOT, ".scale_sf1")
 SLOW_TAIL = {
     "setsim_join_prefix": "documents",
     "importance_weights": "documents",
@@ -212,7 +217,7 @@ def probe_sf1() -> None:
     from dhs_to_database_spark.session import get_spark
     from dhs_to_database_spark.sources.tables import load_table
 
-    subprocess.run([sys.executable, "/root/repo/tools/gen_sf1.py"], check=True)
+    subprocess.run([sys.executable, _GEN_SF1], check=True)
     spark = get_spark("scale-probe-sf1")
     qs = em.queries()
     sfs = SFS + [SF1_DIR]
@@ -241,7 +246,7 @@ def probe_sf1() -> None:
             cells.append(f"{dt:.2f} / {counts[(sf, table)] / dt / 1000:,.0f}")
         lines.append(f"| {name} | " + " | ".join(cells) + " |")
         print(lines[-1])
-    with open("/root/repo/SCALING.md", "a") as f:
+    with open(_SCALING_MD, "a") as f:
         f.write("\n".join(lines) + "\n")
 
 
@@ -253,7 +258,7 @@ def probe_sf1() -> None:
 # TREND, and the guard only trips on a collapse CONFIRMED by a second
 # run of the failing cell (ADVICE r8: one noisy multi-minute run must
 # not masquerade as super-linear work, nor truncate the artifact).
-SF10_DIR = "/root/repo/.scale_sf10"
+SF10_DIR = os.path.join(_REPO_ROOT, ".scale_sf10")
 DECADE_TAIL = {
     "dedup_exact": "documents",
     "minhash_lsh_md5": "documents",
@@ -340,9 +345,9 @@ def probe_sf10() -> None:
     from dhs_to_database_spark.session import get_spark
     from dhs_to_database_spark.sources.tables import load_table
 
-    subprocess.run([sys.executable, "/root/repo/tools/gen_sf1.py"], check=True)
+    subprocess.run([sys.executable, _GEN_SF1], check=True)
     subprocess.run(
-        [sys.executable, "/root/repo/tools/gen_sf1.py", "--sf10"], check=True
+        [sys.executable, _GEN_SF1, "--sf10"], check=True
     )
     spark = get_spark("scale-probe-sf10")
     qs = em.queries()
@@ -424,7 +429,7 @@ def probe_sf10() -> None:
         print(lines[-1])
     # write the FULL table before asserting (ADVICE r8: a single tripped
     # guard must not truncate the artifact mid-append)
-    with open("/root/repo/SCALING.md", "a") as f:
+    with open(_SCALING_MD, "a") as f:
         f.write("\n".join(lines) + "\n")
     assert not failures, (
         f"super-linear work across the final decade (confirmed by a second"
@@ -469,7 +474,7 @@ def main() -> None:
         lines.append(f"| {name} | " + " | ".join(cells) + " |")
         print(lines[-1])
 
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(_SCALING_MD, "w") as f:
         f.write("\n".join(lines) + "\n")
 
 
