@@ -157,20 +157,6 @@ def global_rank_parts(
     return ranked, acc, RankInputHandle(tagged)
 
 
-def global_rank(
-    df: DataFrame,
-    sort_cols: list[str],
-    rank_name: str = "rank",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """``global_rank_parts`` without the bookkeeping — the materialized
-    copy of the input stays live for the session (fine for tests and
-    one-shot jobs; long-lived sessions should use ``global_rank_parts``
-    and unpersist the handle)."""
-    ranked, _, _ = global_rank_parts(df, sort_cols, rank_name, num_partitions)
-    return ranked
-
-
 def exact_ntile(rank_col: str, n: int, total: int) -> Column:
     """SQL-standard ntile bucket from a 1-based global rank: the first
     ``total % n`` buckets get one extra row."""

@@ -21,102 +21,11 @@ from .registry import query
 from .relational import _dec, _money
 
 
-# ---------------------------------------------------------------------------
-# Boundary-carry partitioning for trailing window frames on an ordered
-# axis. A bare ``Window.orderBy(...)`` funnels every row through ONE
-# partition (Spark's "No Partition Defined" warning). These axes are
-# post-aggregation (one row per day/week — thousands of rows even at
-# 100 TB), so the funnel is bounded, but the bound is implicit and the
-# single task serializes the window. Instead: split the axis into
-# RANK-dense blocks (``ranking.global_rank`` — range partition +
-# offsets, itself free of single-partition windows) and REPLICATE each
-# block's last ``n_carry`` rows into the next block, flagged
-# ``__carry``. Because ranks are dense, every block except the last is
-# FULL, so the carry is always sufficient — a calendar-partitioned
-# carry (year + last-6-rows, the previous design) silently broke the
-# "value-identical to the global window" contract whenever a calendar
-# year held fewer than ``n_carry`` rows or was empty (the carry only
-# ever reached ONE partition forward). Rank blocks cannot be sparse, so
-# trailing ROWS frames (up to ``n_carry`` PRECEDING), ``lag(k)`` with
-# k <= ``n_carry``, and RANGE frames up to ``n_carry`` PRECEDING on a
-# distinct-integer axis (a value window of width n covers at most n
-# distinct preceding rows) all see exactly the rows the global window
-# would. Carry rows exist only to feed frames; their outputs are
-# dropped.
-# ---------------------------------------------------------------------------
-
-
-def with_rank_carry(
-    df: DataFrame, order_col: str, n_carry: int, block_rows: int = 365
-):
-    """Add ``__part`` (dense rank block, monotone with ``order_col``) and
-    ``__carry``; the last ``n_carry`` rows of each block are duplicated
-    into the following block. ``order_col`` must be a total order (the
-    post-aggregation axes here are unique by construction).
-
-    Returns ``(carried_df, handle)``: the rank pass materializes its
-    tagged input once; the caller must materialize its own result
-    (e.g. ``localCheckpoint``) and then call ``handle.unpersist()`` so
-    nothing stays pinned in a shared session.
-    """
-    from .ranking import global_rank_parts
-
-    if block_rows < n_carry:
-        raise ValueError("block_rows must be >= n_carry (carry reaches one block)")
-    ranked, _, handle = global_rank_parts(df, [order_col], rank_name="__r")
-    d = ranked.withColumn(
-        "__part", F.expr(f"CAST((__r - 1) DIV {block_rows} AS INT)")
-    )
-    carry = (
-        d.filter((F.col("__r") - 1) % block_rows >= block_rows - n_carry)
-        .withColumn("__part", F.col("__part") + 1)
-        .withColumn("__carry", F.lit(True))
-    )
-    out = d.withColumn("__carry", F.lit(False)).unionByName(carry).drop("__r")
-    return out, handle
-
-
-#: Observe-then-tier cutoff for axis-sized window frames: a single-task
-#: window over up to this many rows is cheaper than a rank pass (the rank
-#: machinery costs ~3 extra jobs; a 32k-row sort in one task is
-#: milliseconds). Post-aggregation calendar axes (days/weeks) sit far
-#: below this even at 100 TB of events; the rank-carry tier exists for
-#: axes that genuinely grow with the data (e.g. per-entity time grids).
-_AXIS_TIER_ROWS = 32_768
-
-
-def tiered_carry(df: DataFrame, order_col: str, n_carry: int):
-    """Tier the boundary-carry machinery by OBSERVED axis size (the
-    clustering.dedup_components observe-then-tier pattern).
-
-    Materializes ``df`` once (axis-sized — it is always a post-aggregation
-    calendar frame here), counts it, and:
-
-    - at or under ``_AXIS_TIER_ROWS``: returns the pinned axis with
-      constant ``__part``/``__carry`` columns — the downstream
-      ``Window.partitionBy("__part")`` is then a single bounded partition
-      (bounded by the observed count, not by hope), no rank pass;
-    - above: full ``with_rank_carry`` rank-block partitioning.
-
-    Returns ``(carried_df, cleanup)``; call ``cleanup()`` (in a
-    ``finally``) after the downstream result is materialized. Both tiers
-    produce identical window frames — pinned by the tier-parity test.
-    """
-    pinned = df.persist()
-    n = pinned.count()
-    if n <= _AXIS_TIER_ROWS:
-        out = pinned.withColumn("__part", F.lit(0)).withColumn(
-            "__carry", F.lit(False)
-        )
-        return out, pinned.unpersist
-
-    carried, handle = with_rank_carry(pinned, order_col, n_carry)
-
-    def cleanup():
-        handle.unpersist()
-        pinned.unpersist()
-
-    return carried, cleanup
+# The calendar-frame queries (moving_average_daily, range_frame_trailing,
+# wow_growth) run a plain ``Window.orderBy(<axis>)`` over their per-day or
+# per-week aggregate. The single partition is bounded: the axis holds one
+# row per calendar day or week. Each result is a ``localCheckpoint``, so the
+# Window runs inside the checkpoint job and stays out of the final plan.
 
 
 @query(
@@ -558,11 +467,9 @@ def rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Moving aggregates over an ordered frame (ROWS BETWEEN): 7-day trailing
 # average/min/max of daily event value. The window runs over the ALREADY
 # AGGREGATED per-day table (one row per day; the corpus-sized work is the
-# one map-side-combined daily shuffle) and is partitioned into dense
-# rank blocks with a 6-row boundary carry (see with_rank_carry) —
-# parallel tasks, value-identical to a global window at any sparsity. The frame average
-# divides an exact DECIMAL sum by the frame row count, so both engines
-# round identically.
+# one map-side-combined daily shuffle). The frame average divides an
+# exact DECIMAL sum by the frame row count, so both engines round
+# identically.
 # ---------------------------------------------------------------------------
 
 
@@ -592,32 +499,16 @@ def moving_average_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.date_trunc("day", F.col("ts")).cast("date").cast("string").alias("day"))
         .agg(F.round(F.sum(_dec("value")), 2).cast("decimal(18,2)").alias("tv"))
     )
-    # Observed-size tier: single bounded partition for day-sized axes,
-    # rank blocks + 6-row carry above the cutoff — identical frames to
-    # the global window either way (tier-parity test pins this).
-    carried, cleanup = tiered_carry(daily, "day", 6)
-    w = Window.partitionBy("__part").orderBy("day").rowsBetween(-6, 0)
-    try:
-        out = (
-            carried.select(
-                "day",
-                "__carry",
-                F.col("tv").cast("double").alias("total_value"),
-                F.round(
-                    F.sum("tv").over(w).cast("decimal(28,6)") / F.count(F.lit(1)).over(w), 4
-                )
-                .cast("double")
-                .alias("ma7"),
-                F.min("tv").over(w).cast("double").alias("min7"),
-                F.max("tv").over(w).cast("double").alias("max7"),
-            )
-            .filter(~F.col("__carry"))
-            .drop("__carry", "__part")
-            .localCheckpoint(eager=True)  # day-axis-sized
-        )
-    finally:
-        cleanup()
-    return out
+    w = Window.orderBy("day").rowsBetween(-6, 0)
+    return daily.select(
+        "day",
+        F.col("tv").cast("double").alias("total_value"),
+        F.round(F.sum("tv").over(w).cast("decimal(28,6)") / F.count(F.lit(1)).over(w), 4)
+        .cast("double")
+        .alias("ma7"),
+        F.min("tv").over(w).cast("double").alias("min7"),
+        F.max("tv").over(w).cast("double").alias("max7"),
+    ).localCheckpoint(eager=True)  # day-axis-sized
 
 
 # ---------------------------------------------------------------------------
@@ -662,8 +553,7 @@ def window_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # row count, silently reaches across gaps; moving_average_daily above is
 # the ROWS variant on a dense axis). The frame key is an integer epoch
 # day, so both engines share exact frame-boundary arithmetic. Window
-# over the per-day aggregate, partitioned into dense rank blocks with a
-# 6-row boundary carry (with_rank_carry; 6 days span at most 6 rows).
+# over the per-day aggregate.
 # ---------------------------------------------------------------------------
 
 
@@ -706,38 +596,21 @@ def range_frame_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(_dec("value")), 2).cast("decimal(18,2)").alias("tv"),
         )
     )
-    # Observed-size tier (see tiered_carry). In the rank tier the RANGE
-    # frame only reaches 6 DAYS back, and 6 days cover at most 6 distinct
-    # preceding rows on a distinct-integer axis, so the row carry is
-    # always sufficient.
-    carried, cleanup = tiered_carry(daily, "epoch_day", 6)
-    w = Window.partitionBy("__part").orderBy("epoch_day").rangeBetween(-6, 0)
-    try:
-        out = (
-            carried.select(
-                "epoch_day",
-                "n_events",
-                "__carry",
-                F.sum("n_events").over(w).cast("bigint").alias("n_7d"),
-                F.count(F.lit(1)).over(w).cast("bigint").alias("days_present_7d"),
-                F.sum("tv").over(w).cast("double").alias("total_value_7d"),
-            )
-            .filter(~F.col("__carry"))
-            .drop("__carry", "__part")
-            .localCheckpoint(eager=True)  # day-axis-sized
-        )
-    finally:
-        cleanup()
-    return out
+    w = Window.orderBy("epoch_day").rangeBetween(-6, 0)
+    return daily.select(
+        "epoch_day",
+        "n_events",
+        F.sum("n_events").over(w).cast("bigint").alias("n_7d"),
+        F.count(F.lit(1)).over(w).cast("bigint").alias("days_present_7d"),
+        F.sum("tv").over(w).cast("double").alias("total_value_7d"),
+    ).localCheckpoint(eager=True)  # day-axis-sized
 
 
 # ---------------------------------------------------------------------------
 # Period-over-period growth: weekly totals with lag-based deltas — the
 # BI staple. Percent change divides exact decimals and only the final
 # rounded value returns to double; weeks with no predecessor report NULL
-# growth (standard semantics). Window over the per-week
-# aggregate, partitioned into rank blocks with a 1-row carry
-# (with_rank_carry).
+# growth (standard semantics). Window over the per-week aggregate.
 # ---------------------------------------------------------------------------
 
 
@@ -776,39 +649,18 @@ def wow_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(_dec("value")), 2).cast("decimal(18,2)").alias("tv"),
         )
     )
-    # Observed-size tier; lag(1) needs one carry row per block boundary
-    # in the rank tier.
-    carried, cleanup = tiered_carry(weekly, "week", 1)
-    w = Window.partitionBy("__part").orderBy("week")
-    try:
-        out = (
-            carried.select(
-                "week",
-                "n_events",
-                "__carry",
-                F.col("tv").cast("double").alias("total_value"),
-                F.lag("n_events").over(w).cast("bigint").alias("prev_n_events"),
-                # + 0.0 pins the rounded-to-zero sign in both engines
-                # (r12 signed-zero class; see the oracle comment)
-                (
-                    F.round(
-                        (F.col("tv") - F.lag("tv").over(w))
-                        / F.lag("tv").over(w)
-                        * 100,
-                        4,
-                    )
-                    + F.lit(0.0)
-                )
-                .cast("double")
-                .alias("value_growth_pct"),
-            )
-            .filter(~F.col("__carry"))
-            .drop("__carry", "__part")
-            .localCheckpoint(eager=True)  # week-axis-sized
-        )
-    finally:
-        cleanup()
-    return out
+    w = Window.orderBy("week")
+    return weekly.select(
+        "week",
+        "n_events",
+        F.col("tv").cast("double").alias("total_value"),
+        F.lag("n_events").over(w).cast("bigint").alias("prev_n_events"),
+        # + 0.0 pins the rounded-to-zero sign in both engines
+        # (r12 signed-zero class; see the oracle comment)
+        (F.round((F.col("tv") - F.lag("tv").over(w)) / F.lag("tv").over(w) * 100, 4) + F.lit(0.0))
+        .cast("double")
+        .alias("value_growth_pct"),
+    ).localCheckpoint(eager=True)  # week-axis-sized
 
 
 # ---------------------------------------------------------------------------

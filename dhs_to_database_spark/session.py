@@ -58,7 +58,8 @@ def get_spark(app_name: str = "dhs_to_database_spark", cpus: int | None = None) 
         # all-varchar rule) — inference would coerce numeric ids to int
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
         # events.parquet carries TIMESTAMP(NANOS); Spark reads it as raw
-        # nanos-since-epoch long, converted back to a timestamp in load_events.
+        # nanos-since-epoch long, converted back to a timestamp in
+        # sources/tables.py::read_events.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

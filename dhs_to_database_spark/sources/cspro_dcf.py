@@ -480,7 +480,14 @@ def parse_dcf_files(
                     )
             yield pd.DataFrame(out_rows, columns=all_cols)
 
-    parsed = files.select("path", "content").mapInPandas(parse_batch, schema).cache()
+    # Materialized once and owned by the returned frames: a cached plan
+    # would be served again to a later parse of the same (since rewritten)
+    # paths, and would stay in the session's cache after its last use.
+    parsed = (
+        files.select("path", "content")
+        .mapInPandas(parse_batch, schema)
+        .localCheckpoint(eager=True)
+    )
 
     items = parsed.filter(F.col("kind") == "item").select(
         *[F.col(f"i_{c}").alias(c) for c in ITEM_COLUMNS]

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.registry import query
+from ..sources.tables import read_events
 
 #: State-store partition count of the one-shot drains (see
 #: ``drain_to_parquet``).
@@ -28,45 +29,35 @@ STREAM_SHUFFLE_PARTITIONS = 8
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """File-source stream of the events table.
-
-    The corpus has shipped ``ts`` as TIMESTAMP(NANOS) (nanos-epoch long via
-    the legacy conf) and as TIMESTAMP(MICROS, NTZ); mirror the batch loader
-    (``sources.tables.load_table``): take the footer schema from a batch
-    read and normalize ``ts`` to the session-UTC microsecond TimestampType,
-    which event-time watermarks require.
-    """
-    from pyspark.sql.types import LongType, TimestampNTZType
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    """File-source stream of the events table, ``ts`` normalized as in the
+    batch loader (``sources.tables.read_events``, which also supplies the
+    footer schema)."""
     path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema).format("parquet")
-    if os.path.isdir(path):
-        # Directory-style table (the cluster-scale layout: any multi-file
-        # writer produces events.parquet/part-*.parquet) — stream the
-        # directory itself. The pathGlobFilter trick below would silently
-        # match ZERO leaf files here (the filter applies to leaf file
-        # names, and the leaves are part-* files), draining an empty
-        # stream — caught by tools/layout_probe.py (r14). os.path is
-        # fine for the driver contract's local sf_dir; a remote
-        # filesystem deployment would resolve layout via its catalog,
-        # not a path probe.
-        load_path = path
-    else:
-        # Single bare file beside the other tables' files: a file-stream
-        # source lists a DIRECTORY, so point it at sf_dir and filter to
-        # this one leaf file.
-        reader = reader.option("pathGlobFilter", "events.parquet")
-        load_path = sf_dir
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = reader.load(load_path)
-    if isinstance(schema["ts"].dataType, LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif isinstance(schema["ts"].dataType, TimestampNTZType):
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+
+    def load(schema):
+        reader = spark.readStream.schema(schema).format("parquet")
+        if os.path.isdir(path):
+            # Directory-style table (the cluster-scale layout: any multi-file
+            # writer produces events.parquet/part-*.parquet) — stream the
+            # directory itself. The pathGlobFilter trick below would silently
+            # match ZERO leaf files here (the filter applies to leaf file
+            # names, and the leaves are part-* files), draining an empty
+            # stream — caught by tools/layout_probe.py (r14). os.path is
+            # fine for the driver contract's local sf_dir; a remote
+            # filesystem deployment would resolve layout via its catalog,
+            # not a path probe.
+            load_path = path
+        else:
+            # Single bare file beside the other tables' files: a file-stream
+            # source lists a DIRECTORY, so point it at sf_dir and filter to
+            # this one leaf file.
+            reader = reader.option("pathGlobFilter", "events.parquet")
+            load_path = sf_dir
+        if max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+        return reader.load(load_path)
+
+    return read_events(spark, path, load)
 
 
 def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:

@@ -206,20 +206,22 @@ def test_near_dup_clusters_production_path(spark):
 
 
 def test_global_rank_exact_and_ntile_remainder(spark):
-    from dhs_to_database_spark.operators.ranking import exact_ntile, global_rank
+    from dhs_to_database_spark.operators.ranking import exact_ntile, global_rank_parts
 
     df = spark.range(0, 1007).select((F.col("id") * 37 % 1007).alias("k"))
-    ranked = global_rank(df, ["k"], rank_name="r", num_partitions=7)
+    ranked, total, handle = global_rank_parts(df, ["k"], rank_name="r", num_partitions=7)
     rows = ranked.orderBy("k").collect()
+    assert total == 1007
     assert [row["r"] for row in rows] == list(range(1, 1008))
     # SQL-standard ntile with N % n != 0: first N%n buckets get +1 row
     counts = (
-        ranked.withColumn("b", exact_ntile("r", 10, 1007))
+        ranked.withColumn("b", exact_ntile("r", 10, total))
         .groupBy("b")
         .count()
         .orderBy("b")
         .collect()
     )
+    handle.unpersist()
     assert [c["count"] for c in counts] == [101] * 7 + [100] * 3
 
 
@@ -561,56 +563,6 @@ def test_sample_k_per_group_partition_invariant(spark):
     assert all(v <= 20 for v in sizes.values())
     b = {(r["doc_id"], r["lang"]) for r in sample_k_per_group(spark, SF_DIR).collect()}
     assert a == b
-
-
-def test_rank_carry_matches_global_window_on_sparse_calendar(spark):
-    """The code-review scenario that broke the calendar-partitioned carry:
-    an axis whose middle year is EMPTY and whose years hold fewer rows
-    than the frame lookback. Rank-block carry must reproduce the global
-    window exactly; a year-partitioned carry could not (its carry only
-    ever reached one partition forward)."""
-    from pyspark.sql import Window
-
-    from dhs_to_database_spark.operators.windows import with_rank_carry
-
-    days = [
-        "2020-12-28", "2020-12-29", "2020-12-30", "2020-12-31",
-        # 2021 entirely empty
-        "2022-01-01", "2022-01-02",  # fewer rows than the 3-row lookback
-        "2023-01-01",
-    ]
-    df = spark.createDataFrame(
-        [(d, float(i + 1)) for i, d in enumerate(days)], "day string, tv double"
-    )
-    carried, handle = with_rank_carry(df, "day", 3, block_rows=3)  # force carries
-    w = Window.partitionBy("__part").orderBy("day").rowsBetween(-3, 0)
-    got = {
-        r["day"]: (r["s"], r["lag1"])
-        for r in carried.select(
-            "day",
-            "__carry",
-            F.sum("tv").over(w).alias("s"),
-            F.lag("tv").over(Window.partitionBy("__part").orderBy("day")).alias("lag1"),
-        )
-        .filter(~F.col("__carry"))
-        .collect()
-    }
-    handle.unpersist()
-    wg = Window.orderBy("day")
-    want = {
-        r["day"]: (r["s"], r["lag1"])
-        for r in df.select(
-            "day",
-            F.sum("tv").over(wg.rowsBetween(-3, 0)).alias("s"),
-            F.lag("tv").over(wg).alias("lag1"),
-        ).collect()
-    }
-    assert got == want
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="block_rows"):
-        with_rank_carry(df, "day", 5, block_rows=3)
 
 
 def test_decontaminate_pairs_consistent_with_doc_level(spark):

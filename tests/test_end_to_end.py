@@ -122,6 +122,30 @@ def test_golden_pipeline(spark, tmp_path):
     assert read_evolved(spark, res2.tables["RECH1"]).count() == 5
 
 
+def test_rerun_reads_a_rewritten_dictionary(spark, tmp_path):
+    """A second run over the same ``.dcf`` path parses the file as it is
+    now, not a cached earlier parse, and neither run leaves an entry in
+    the session's cache."""
+    staging = tmp_path / "staging"
+    staging.mkdir()
+    (staging / "TESTFC.dat").write_text("\n".join(DAT_LINES) + "\n")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    was_empty = cache.isEmpty()
+
+    def item_names():
+        res = run_pipeline(
+            spark, staging_folder=str(staging), warehouse_dir=str(tmp_path / "wh")
+        )
+        return {r["Name"] for r in res.items.collect()}
+
+    (staging / "TESTFC.dcf").write_text(DCF_TEXT)
+    assert "HV006" in item_names()
+    (staging / "TESTFC.dcf").write_text(DCF_TEXT.replace("HV006", "HV999"))
+    names = item_names()
+    assert "HV999" in names and "HV006" not in names
+    assert cache.isEmpty() == was_empty
+
+
 def test_stage1_update_check_drives_the_pipeline(spark, tmp_path):
     """The full reference lifecycle in one story: the stage-1 catalog diff
     (01 nb: presence probe + anti-join) decides WHICH surveys to fetch,

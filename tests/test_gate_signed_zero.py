@@ -204,6 +204,22 @@ def test_conf_change_allowlist_contract():
     assert all(len(reason) >= 20 for reason in config_probe.CONF_CHANGE_OK.values())
 
 
+def test_config_probe_flags_a_cache_leak(spark):
+    """config_probe fails any query that leaves an entry in the session's
+    CacheManager (no allowlist), and clears the entry so the next query
+    is judged on its own."""
+    import config_probe
+
+    spark.catalog.clearCache()
+    digest, changed, cache_left = config_probe.probe_query(
+        spark, lambda s, sf: s.range(3).cache(), "unused"
+    )
+    assert cache_left and not changed
+    assert config_probe.cache_empty(spark)
+    clean = config_probe.probe_query(spark, lambda s, sf: s.range(3), "unused")
+    assert clean == (digest, [], False)
+
+
 def test_key_cell_recurses_into_arrays_and_maps():
     """r14 (found by config_probe): array cells must compare by element
     bits, not by repr — np.ndarray vs list of identical floats tagged

@@ -29,9 +29,11 @@ compares the two digest maps.
 
 Session hygiene rides along. Each worker diffs ``spark.conf.getAll``
 around every query, and any changed key outside ``CONF_CHANGE_OK`` fails
-the probe. Each worker also runs with its own ``TMPDIR``; once it has
-exited, any entry left there that is not one of the JVM's own
-(``perfbench/harness.py``'s ``JVM_TMP_PREFIXES``) fails the probe.
+the probe (``CONFLEAK``). A query that leaves an entry in the session's
+CacheManager fails it too (``CACHELEAK``, no allowlist). Each worker also
+runs with its own ``TMPDIR``; once it has exited, any entry left there
+that is not one of the JVM's own (``perfbench/harness.py``'s
+``JVM_TMP_PREFIXES``) fails the probe (``TMPLEAK``).
 
 Any session-dependent behavior a query needs (e.g. nanosAsLong for the
 events corpus, UTC timestamp semantics) must be established at runtime
@@ -75,9 +77,27 @@ CONF_CHANGE_OK: dict[str, str] = {
 }
 
 
-def _worker(mode: str, sf: str, out_path: str) -> None:
+def cache_empty(spark) -> bool:
+    """True when the session's CacheManager holds no cached plan."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def probe_query(spark, fn, sf: str) -> tuple[str, list[str], bool]:
+    """Run one query: ``(result digest, conf keys it left changed outside
+    CONF_CHANGE_OK, whether it left a CacheManager entry)``. A leaked
+    entry is cleared so the next query is judged on its own."""
     from bitwise_probe import frame_key
 
+    before, was_empty = conf_snapshot(spark), cache_empty(spark)
+    key = frame_key(fn(spark, sf).toPandas())
+    changed = [k for k in conf_diff(before, conf_snapshot(spark)) if k not in CONF_CHANGE_OK]
+    cache_left = was_empty and not cache_empty(spark)
+    if cache_left:
+        spark.catalog.clearCache()
+    return hashlib.sha256(repr(key).encode()).hexdigest(), changed, cache_left
+
+
+def _worker(mode: str, sf: str, out_path: str) -> None:
     if mode == "tuned":
         from dhs_to_database_spark.session import get_spark
 
@@ -96,15 +116,17 @@ def _worker(mode: str, sf: str, out_path: str) -> None:
 
     digests: dict[str, str] = {}
     conf_changed: dict[str, list[str]] = {}
+    cache_left: list[str] = []
     for name, fn in em.queries().items():
-        before = conf_snapshot(spark)
-        key = frame_key(fn(spark, sf).toPandas())
-        digests[name] = hashlib.sha256(repr(key).encode()).hexdigest()
-        changed = [k for k in conf_diff(before, conf_snapshot(spark)) if k not in CONF_CHANGE_OK]
+        digests[name], changed, cached = probe_query(spark, fn, sf)
         if changed:
             conf_changed[name] = changed
+        if cached:
+            cache_left.append(name)
     with open(out_path, "w") as fh:
-        json.dump({"digests": digests, "conf_changed": conf_changed}, fh)
+        json.dump(
+            {"digests": digests, "conf_changed": conf_changed, "cache_left": cache_left}, fh
+        )
 
 
 def main() -> int:
@@ -134,6 +156,7 @@ def main() -> int:
         maps[mode] = record["digests"]
         for name, keys in record["conf_changed"].items():
             hygiene.append(f"CONFLEAK {mode} {name}: {', '.join(keys)}")
+        hygiene += [f"CACHELEAK {mode} {name}" for name in record["cache_left"]]
         hygiene += [f"TMPLEAK  {mode} {e}" for e in left]
 
     fails, allowed = [], []

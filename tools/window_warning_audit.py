@@ -5,7 +5,7 @@ a partitionless ordered Window. This tool closes the other half: it runs
 every registry query with the driver JVM's stderr captured (Spark's log4j
 console appender writes there) and attributes each runtime
 ``WindowExec: No Partition Defined`` warning to the query that was
-executing. Queries may warn ONLY if they are documented tier sites in
+executing. Queries may warn ONLY if they are documented sites in
 ``EXPECTED_WARN_SITES`` — a new intermediate-job global window anywhere
 else fails the audit, so a regression can no longer hide in the expected
 noise.
@@ -24,20 +24,17 @@ sys.path.insert(0, _REPO)
 
 _MARK = "No Partition Defined"
 
-# Documented tier sites: query -> why an intermediate job may legitimately
-# run a bounded single-partition window. Keep in sync with the module
-# comments at the named sites. All three are windows.tiered_carry small-tier
-# users: under _AXIS_TIER_ROWS the observed-small calendar axis runs the
-# frame in one bounded partition (the constant __part partition key is
-# constant-folded away by the optimizer, so WindowExec logs the warning),
-# and the window executes inside the localCheckpoint materialization job —
-# which is why the FINAL plan the static audit reads contains no Window
-# node at all. Above the cutoff the rank-carry tier takes over and these
-# queries stop warning (tier-parity test pins value equality).
+# Documented sites: query -> why an intermediate job may legitimately
+# run a bounded single-partition window. Keep in sync with the comment in
+# operators/windows.py. All three run a plain ``Window.orderBy(<axis>)``
+# over a per-day or per-week aggregate — one row per calendar day or week,
+# so the single partition is bounded — and the window executes inside the
+# result's localCheckpoint job, which is why the FINAL plan the static
+# audit reads contains no Window node at all.
 EXPECTED_WARN_SITES: dict[str, str] = {
-    "moving_average_daily": "tiered_carry small tier (day axis <= 32768 rows observed)",
-    "range_frame_trailing": "tiered_carry small tier (epoch_day axis <= 32768 rows observed)",
-    "wow_growth": "tiered_carry small tier (week axis <= 32768 rows observed)",
+    "moving_average_daily": "checkpointed calendar window (one row per day)",
+    "range_frame_trailing": "checkpointed calendar window (one row per epoch_day present)",
+    "wow_growth": "checkpointed calendar window (one row per week)",
 }
 
 
